@@ -2,12 +2,11 @@ package graft.operators
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.dsv2.{LakeLog, LakePartitioning, LakeTableIO}
+import graft.sources.dsv2.{LakeFs, LakeLog, LakePartitioning, LakeTableIO}
 
 /** Table-maintenance surface over a [[graft.sources.dsv2.LakeTable]]'s
   * snapshot log — the operations a lakehouse user runs daily next to
@@ -25,14 +24,16 @@ object LakeSnapshots {
     * AND the CALL-procedure renderings of the audit trail both map from
     * (they drifted once; never again).
     */
-  def historyRows(dir: String): Seq[(Long, String, Int, Int, Int, Long,
+  def historyRows(dir: String)(
+      implicit lfs: LakeFs): Seq[(Long, String, Int, Int, Int, Long,
       Boolean)] =
     LakeLog.versions(dir).map(LakeLog.snapshotAt(dir, _))
       .map(s => (s.version, s.operation, s.files.size, s.added.size,
         s.removed.size, s.addedRows, s.dataChange))
 
   /** One row per committed version: the audit trail. */
-  def history(spark: SparkSession, dir: String): DataFrame = {
+  def history(spark: SparkSession, dir: String)(
+      implicit lfs: LakeFs): DataFrame = {
     import spark.implicits._
     historyRows(dir)
       .toDF("version", "operation", "n_files", "n_added", "n_removed",
@@ -47,7 +48,7 @@ object LakeSnapshots {
     * sets and cancel in the `exceptAll`, so only true changes surface.
     */
   def changes(spark: SparkSession, dir: String, fromVersion: Long,
-              toVersion: Long): DataFrame = {
+              toVersion: Long)(implicit lfs: LakeFs): DataFrame = {
     require(fromVersion <= toVersion,
       s"changes($fromVersion -> $toVersion): range must go forward")
     // an equality-delete commit changes NO files, so a file-diff feed
@@ -136,7 +137,7 @@ object LakeSnapshots {
   }
 
   /** Restore the table to `version` as a NEW commit (history preserved). */
-  def rollback(dir: String, version: Long): Long =
+  def rollback(dir: String, version: Long)(implicit lfs: LakeFs): Long =
     LakeLog.rollback(dir, version).version
 
   /** Drop all but the newest `keepLast` snapshots (tagged ones survive)
@@ -146,10 +147,11 @@ object LakeSnapshots {
     * not-yet-committed file). Returns (expired manifests, deleted
     * files).
     */
-  def expire(dir: String, keepLast: Int): (Int, Int) =
+  def expire(dir: String, keepLast: Int)(implicit lfs: LakeFs): (Int, Int) =
     LakeLog.expire(dir, keepLast)
 
-  def expire(dir: String, keepLast: Int, graceMs: Long): (Int, Int) =
+  def expire(dir: String, keepLast: Int, graceMs: Long)(
+      implicit lfs: LakeFs): (Int, Int) =
     LakeLog.expire(dir, keepLast, graceMs)
 
   /** Maintenance rewrites stage through Spark's parquet writer, whose
@@ -208,7 +210,8 @@ object LakeSnapshots {
     */
   private def eqFold(spark: SparkSession, dir: String,
                      head: graft.sources.dsv2.LakeLog.Snapshot,
-                     schema: org.apache.spark.sql.types.StructType)
+                     schema: org.apache.spark.sql.types.StructType)(
+      implicit lfs: LakeFs)
       : (Map[String, Seq[String]], org.apache.spark.sql.Column) = {
     import graft.sources.dsv2.LakeEq
     import org.apache.spark.sql.functions.{array, col, concat_ws, datediff, lit, to_date, udf, when}
@@ -271,7 +274,7 @@ object LakeSnapshots {
     */
   private[graft] def eqGuard(dir: String,
                       head: graft.sources.dsv2.LakeLog.Snapshot,
-                      what: String): () => Unit = () => {
+                      what: String)(implicit lfs: LakeFs): () => Unit = () => {
     val now =
       LakeLog.current(dir).map(_.eqs).getOrElse(Seq.empty).toSet
     val missing = head.eqs.filterNot(now)
@@ -291,7 +294,8 @@ object LakeSnapshots {
   private def flaggedRows(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType, dir: String,
       files: Seq[String], dvs: Map[String, Seq[String]],
-      flag: Option[org.apache.spark.sql.Column]): DataFrame = {
+      flag: Option[org.apache.spark.sql.Column])(
+      implicit lfs: LakeFs): DataFrame = {
     val dvRows = files.flatMap(f => dvs.get(f).toSeq.flatMap(vs =>
       graft.sources.dsv2.LakeDv.positions(dir, vs)).map(p => (f, p)))
     val dvDf = spark.createDataFrame(
@@ -307,7 +311,7 @@ object LakeSnapshots {
   /** Dead (DV'd) position count of `files` at `head`. */
   private def dvDead(dir: String,
                      head: graft.sources.dsv2.LakeLog.Snapshot,
-                     files: Seq[String]): Long =
+                     files: Seq[String])(implicit lfs: LakeFs): Long =
     files.map(f => head.dvs.get(f).map(vs => graft.sources.dsv2.LakeDv
       .positions(dir, vs).length.toLong).getOrElse(0L)).sum
 
@@ -323,14 +327,14 @@ object LakeSnapshots {
     * (files before, files after).
     */
   def zorder(spark: SparkSession, dir: String, cols: Seq[String],
-             targetFiles: Int): (Int, Int) = {
+             targetFiles: Int)(implicit lfs: LakeFs): (Int, Int) = {
     require(cols.nonEmpty && cols.size <= 4,
       s"zorder takes 1-4 numeric columns, got ${cols.size}")
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
     val head = LakeLog.current(dir).getOrElse(throw new IllegalStateException(
       s"$dir has no snapshot log to cluster"))
     if (head.files.isEmpty) return (0, 0)
-    val fs = new Path(dir).getFileSystem(new Configuration())
+    val fs = lfs.fs(dir)
     val schema0 = LakeTableIO.tableSchema(dir)
     // RETIREMENT FOLDING (r15): zorder rewrites rows anyway, so under
     // live equality refs it APPLIES and RETIRES them in the same
@@ -520,7 +524,7 @@ object LakeSnapshots {
     * never rows.
     */
   def compact(spark: SparkSession, dir: String,
-              targetBytes: Long): (Int, Int) = {
+              targetBytes: Long)(implicit lfs: LakeFs): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val head = LakeLog.current(dir).getOrElse(throw new IllegalStateException(
       s"$dir has no snapshot log to compact"))
@@ -538,7 +542,7 @@ object LakeSnapshots {
         retireCore(spark, dir, head, Some(targetBytes), "compact")
       return (before, after)
     }
-    val fs = new Path(dir).getFileSystem(new Configuration())
+    val fs = lfs.fs(dir)
     val sized = head.files.map(f =>
       f -> fs.getFileStatus(new Path(dir, f)).getLen)
     // files carrying deletion vectors are excluded: their FOOTER row
@@ -707,7 +711,8 @@ object LakeSnapshots {
     * pass MOR/upsert tables run periodically (Delta's PURGE, Iceberg's
     * rewrite_position_delete_files / rewrite_data_files).
     */
-  def rewriteDeletes(spark: SparkSession, dir: String): (Int, Long) = {
+  def rewriteDeletes(spark: SparkSession, dir: String)(
+      implicit lfs: LakeFs): (Int, Long) = {
     val head = LakeLog.current(dir).getOrElse(throw new IllegalStateException(
       s"$dir has no snapshot log"))
     if (head.dvs.isEmpty && head.eqs.isEmpty) return (0, 0L)
@@ -737,9 +742,10 @@ object LakeSnapshots {
 
   private def retireCore(spark: SparkSession, dir: String,
       head: graft.sources.dsv2.LakeLog.Snapshot,
-      binBytes: Option[Long], what: String): (Int, Long, Int, Int) = {
+      binBytes: Option[Long], what: String)(
+      implicit lfs: LakeFs): (Int, Long, Int, Int) = {
     import graft.sources.dsv2.LakeEq
-    val fs = new Path(dir).getFileSystem(new Configuration())
+    val fs = lfs.fs(dir)
     val schema = LakeTableIO.tableSchema(dir)
     // EQUALITY-DELETE retirement: every file a live ref applies to
     // (sequencing + key-stat scoping — the same scope the scan

@@ -120,7 +120,30 @@ object SnapshotDelta {
   def updatedNarrow(newest: DataFrame, previous: DataFrame, key: String,
                     attrs: Seq[String],
                     mode: ChangeMode = Legacy,
-                    maxChangedKeys: Long = -1L): DataFrame = {
+                    maxChangedKeys: Long = -1L): DataFrame =
+    narrowed(newest, previous, key, attrs, mode, maxChangedKeys)._1
+
+  /** [[updatedNarrow]] consumed once by `use`, after which the persisted
+    * changed-key set is released. A session that re-ingests the same
+    * partitions must not keep it: the cache manager matches the next
+    * run's set to this one by plan, and recomputing it reads files the
+    * re-ingest has since replaced.
+    */
+  def withUpdatedNarrow[A](newest: DataFrame, previous: DataFrame,
+                           key: String, attrs: Seq[String],
+                           mode: ChangeMode = Legacy)(
+      use: DataFrame => A): A = {
+    val (delta, changed) = narrowed(newest, previous, key, attrs, mode, -1L)
+    try use(delta) finally changed.foreach(_.unpersist(blocking = true))
+  }
+
+  /** The narrow delta, and the changed-key set it persisted (None once
+    * the guard routed to [[updated]] and dropped it).
+    */
+  private def narrowed(newest: DataFrame, previous: DataFrame, key: String,
+                       attrs: Seq[String], mode: ChangeMode,
+                       maxChangedKeys: Long)
+      : (DataFrame, Option[DataFrame]) = {
     val rowHash = "_graft_rowhash"
     val h = xxhash64(
       struct(attrs.flatMap(c => Seq(col(c).isNull, col(c))): _*))
@@ -161,7 +184,7 @@ object SnapshotDelta {
       }
     if (changed.count() > budget) {
       changed.unpersist(blocking = false) // routed away: drop the cache
-      return updated(newest, previous, key, attrs, mode)
+      return (updated(newest, previous, key, attrs, mode), None)
     }
     // phase 2: shrink each wide side to the changed keys, then run the
     // exact pair-level logic of `updated` on what remains. The semi
@@ -178,9 +201,10 @@ object SnapshotDelta {
     val p2 = p.join(broadcast(changed), col(s"p.$key") === col("ck"),
       "left_semi")
     val pre = col(s"n.$rowHash") =!= col(s"p.$rowHash")
-    n2.join(p2, col(s"n.$key") === col(s"p.$key"), "inner")
+    (n2.join(p2, col(s"n.$key") === col(s"p.$key"), "inner")
       .where(pre && changePredicate(attrs, "n", "p", mode))
-      .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*)
+      .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*),
+      Some(changed))
   }
 
   /** Rows whose key appears only in the newest snapshot — the documented

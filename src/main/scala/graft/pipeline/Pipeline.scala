@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotDelta
 import graft.sources.{LakeIngest, SingleFileCsv}
+import graft.sources.dsv2.LakeFs
 
 /** The weekly pipeline, end to end — the reference's `main` sequence
   * (abr-etl.go:22-41): kill-switch check → extract → load to the
@@ -71,7 +72,7 @@ object Pipeline {
   def checkDisabled(spark: SparkSession, cfg: Config, log: RunLog): Unit = {
     val p = new Path(cfg.lakeRoot, "disabled")
     try {
-      val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())
+      val fs = LakeFs(spark).fs(p)
       if (fs.exists(p)) {
         val in = fs.open(p)
         val body =
@@ -164,12 +165,11 @@ object AgencyDeltaStage {
     log("Running Delta Query (Change)")
     // narrow-shuffle formulation: unbucketed snapshots, so the changed
     // keys steer the wide join instead of shuffling 34 columns per side
-    val updated = SnapshotDelta.updatedNarrow(
-      n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey))
-    val updPath = SingleFileCsv.write(
-      updated,
-      s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
-      s"${dataset}_updated.csv")
+    val updPath = SnapshotDelta.withUpdatedNarrow(
+        n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey))(
+      SingleFileCsv.write(_,
+        s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
+        s"${dataset}_updated.csv"))
     log(s"Delta written: $updPath")
 
     log("Running Delta Query (New)")

@@ -1,13 +1,12 @@
 package graft.queries
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.LakeSnapshots
-import graft.sources.dsv2.{LakeCatalogs, LakeLog}
+import graft.sources.dsv2.{LakeCatalogs, LakeFs, LakeLog}
 
 /** The versioned-lake surface as declared, oracle-checked queries: time
   * travel, version-diff CDC, audit history, rollback, history expiry,
@@ -74,10 +73,11 @@ object LakeQueries {
   }
 
   /** A wiped scratch dir for a streaming query's sink + checkpoint. */
-  private def freshDir(name: String, dir: String): String = {
+  private def freshDir(name: String, dir: String)(
+      implicit lfs: LakeFs): String = {
     val root = dirPath(name, dir)
     val p = new Path(root)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = lfs.fs(p)
     if (fs.exists(p)) fs.delete(p, true)
     root
   }
@@ -151,6 +151,7 @@ object LakeQueries {
     // wrong rounding direction or a head read both fail the oracle.
     // Manifest timestamps are strictly increasing by construction.
     "lake_timestamp_travel" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_ts")
       graft.Fixtures.once(s, dir, "lake_ts") {
@@ -169,6 +170,7 @@ object LakeQueries {
     // both file sets and cancel, updates surface as delete+insert
     // pairs. The oracle is the same delta stated set-algebraically.
     "lake_cdc" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       graft.Fixtures.once(s, dir, "lake_cdc") {
         val tbl = freshTable(s, dir, "lake_cdc")
@@ -188,6 +190,7 @@ object LakeQueries {
     // deliberately not projected — row counts are the layout-independent
     // contract, file counts are a layout detail.
     "lake_history" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       graft.Fixtures.once(s, dir, "lake_hist") {
         twoAppendTable(s, dir, "lake_hist")
@@ -200,6 +203,7 @@ object LakeQueries {
     // file set equals v1's) — the head read after rollback must equal
     // the original load, and the rolled-past delete stays in history.
     "lake_rollback" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_rb")
       graft.Fixtures.once(s, dir, "lake_rb") {
@@ -215,6 +219,7 @@ object LakeQueries {
     // expire (referenced files are never touched; only manifests and
     // orphaned pre-rewrite files go).
     "lake_expire" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_exp")
       graft.Fixtures.once(s, dir, "lake_exp") {
@@ -258,6 +263,7 @@ object LakeQueries {
     // promise (its manifest AND data files survive the vacuum). One
     // query proves tagging, tag resolution, and tag-aware expiry.
     "lake_tag_travel" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_tag")
       graft.Fixtures.once(s, dir, "lake_tag") {
@@ -583,6 +589,7 @@ object LakeQueries {
     // oracle restates the fold declaratively: last event per key,
     // deletes absent — the batch-MERGE semantics.
     "stream_lake_upsert" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       val src = upsertEpochSrc(s, dir)
       val dst = tableId(dir, "lake_upsdst")
       graft.Fixtures.once(s, dir, "lake_upsdst") {
@@ -613,6 +620,7 @@ object LakeQueries {
     // arithmetic declaratively: inserts = every epoch's post-images;
     // deletes = each epoch's keys that had a LIVE prior version.
     "stream_lake_upsert_cdc" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       val src = upsertEpochSrc(s, dir)
       val dst = tableId(dir, "lake_ucdst")
       graft.Fixtures.once(s, dir, "lake_ucdst") {
@@ -645,6 +653,7 @@ object LakeQueries {
     // maintainable without stopping the stream. The oracle restates
     // the fold — retirement must preserve the exact state.
     "lake_compact_retire" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       val src = upsertEpochSrc(s, dir)
       val dst = tableId(dir, "lake_crdst")
       graft.Fixtures.once(s, dir, "lake_crdst") {
@@ -675,6 +684,7 @@ object LakeQueries {
     // files (the eq-set-stability guard closes the mid-op race). The
     // oracle composes the fold with the DML declaratively.
     "lake_dml_under_refs" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val dst = tableId(dir, "lake_dmdst")
       graft.Fixtures.once(s, dir, "lake_dmdst") {
@@ -718,6 +728,7 @@ object LakeQueries {
     // fast paths come back after every retirement. The oracle is the
     // same declarative fold: inline retirement must preserve state.
     "stream_lake_upsert_retire" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       val src = upsertEpochSrc(s, dir)
       val dst = tableId(dir, "lake_ardst")
       graft.Fixtures.once(s, dir, "lake_ardst") {
@@ -843,6 +854,7 @@ object LakeQueries {
     // Fixture: a MOR load with DVs (k % 7 = 3 deleted) plus one
     // engine-committed 5-key ref; the oracle recounts from rows.
     "lake_files_inventory_eq" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_finv_eq")
       graft.Fixtures.once(s, dir, "lake_finv_eq") {
@@ -881,6 +893,7 @@ object LakeQueries {
     // — key stats scope it to the ONE file whose band holds those
     // keys; the oracle restates the arithmetic.
     "lake_deletes_inventory" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_dinv")
       graft.Fixtures.once(s, dir, "lake_dinv") {
@@ -1326,6 +1339,7 @@ object LakeQueries {
     // from `orders` directly, so a transaction that half-applied (or
     // double-applied on recovery) hash-mismatches.
     "lake_multi_commit" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val a = tableId(dir, "lake_mtx_a")
       val b = tableId(dir, "lake_mtx_b")
@@ -1359,6 +1373,7 @@ object LakeQueries {
     // are separately atomic at the marker (lake_atomic_read); this
     // query is the STABLE-cut primitive on top of that.
     "lake_consistent_view" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       // settle any marker a crashed previous RUN left pending before
       // the DROPs below delete the staged files it references
@@ -1400,6 +1415,7 @@ object LakeQueries {
     // (batch in a, not in b) or double-counted the applied side would
     // hash-mismatch.
     "lake_atomic_read" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       graft.sources.dsv2.LakeTx.recover(LakeCatalogs.root)
       val (an, bn) = ("lake_ar_a", "lake_ar_b")
@@ -1464,6 +1480,7 @@ object LakeQueries {
     // the read-back of the TARGET proves the pipe moved every row
     // exactly once through both halves of the streaming contract.
     "stream_lake_sink" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       val dst = tableId(dir, "lake_pipe_dst")
       graft.Fixtures.once(s, dir, "lake_pipe") {
@@ -1486,6 +1503,7 @@ object LakeQueries {
     // read-back must hold every appended row exactly once (offsets are
     // commit versions riding the checkpoint — no replays, no gaps).
     "stream_lake_source" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       graft.Fixtures.once(s, dir, "lake_stream") {
         val tbl = twoAppendTable(s, dir, "lake_stream")
@@ -1547,6 +1565,7 @@ object LakeQueries {
     // versions, availableNow drain) — the merge-on-read commit the
     // append-only lake stream must reject flows here as delete events
     "stream_lake_cdc" -> ((s, dir) => {
+      implicit val lfs: LakeFs = LakeFs(s)
       LakeCatalogs.register(s)
       graft.Fixtures.once(s, dir, "lake_cdfs") {
         val tbl = freshTable(s, dir, "lake_cdfs")

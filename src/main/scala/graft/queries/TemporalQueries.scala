@@ -765,8 +765,7 @@ object TemporalQueries {
           StructField("o_orderstatus", StringType),
           StructField("o_totalprice", DoubleType),
           StructField("importdate", StringType)))
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(s"file://$tmp"), s.sessionState.newHadoopConf())
+        val fs = graft.sources.dsv2.LakeFs(s).fs(s"file://$tmp")
         // 64 lake files / 32 per trigger = 2 micro-batches: the minimum
         // that still proves the incremental fold (batch count does not
         // change the result — the per-batch streaming machinery is the
@@ -829,8 +828,7 @@ object TemporalQueries {
           StructField("o_orderstatus", StringType),
           StructField("o_totalprice", DoubleType),
           StructField("importdate", StringType)))
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(s"file://$tmp"), s.sessionState.newHadoopConf())
+        val fs = graft.sources.dsv2.LakeFs(s).fs(s"file://$tmp")
         var current: Option[String] = None // batches run sequentially
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", maxFilesPerTrigger(s))
@@ -966,8 +964,7 @@ object TemporalQueries {
       val schema = StructType(Seq(
         StructField("doc_id", LongType),
         StructField("shingle", StringType)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(s"file://$tmp"), s.sessionState.newHadoopConf())
+      val fs = graft.sources.dsv2.LakeFs(s).fs(s"file://$tmp")
       var current: Option[String] = None // batches run sequentially
       val q = s.readStream.schema(schema)
         // 8 files / 4 = 2 batches — the cheapest shape that still

@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.DeltaQueries
+import graft.sources.dsv2.LakeFs
 
 /** A real Hive-partitioned snapshot table, mirroring the reference's lake
   * layout `DATA/<Dataset>/importdate=<yyyy-MM-dd>/` (reference:
@@ -52,9 +53,7 @@ object AgencyLake {
     */
   def ensure(spark: SparkSession, sfDir: String): String = synchronized {
     val root = tableRoot(sfDir)
-    val fs = FileSystem.get(
-      new java.net.URI(s"file://$root"),
-      spark.sessionState.newHadoopConf())
+    val fs = LakeFs(spark).fs(s"file://$root")
     if (!fs.exists(new Path(root, "_SUCCESS"))) {
       val prev = DeltaQueries.previous(spark, sfDir)
         .withColumn("importdate", lit(previousDate))
@@ -146,9 +145,7 @@ object AgencyLake {
   def ensureWideSkew(spark: SparkSession, sfDir: String): String =
     synchronized {
       val root = wideSkewRoot(sfDir)
-      val fs = FileSystem.get(
-        new java.net.URI(s"file://$root"),
-        spark.sessionState.newHadoopConf())
+      val fs = LakeFs(spark).fs(s"file://$root")
       if (!fs.exists(new Path(root, "_SUCCESS"))) {
         val prev = DeltaQueries.wideSkewPrevious(spark, sfDir)
           .withColumn("importdate", lit(previousDate))
@@ -181,9 +178,7 @@ object AgencyLake {
   }
 
   private def listImportdates(spark: SparkSession, root: String): Seq[String] = {
-    val fs = FileSystem.get(
-      new java.net.URI(s"file://$root"),
-      spark.sessionState.newHadoopConf())
+    val fs = LakeFs(spark).fs(s"file://$root")
     fs.listStatus(new Path(root)).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -240,9 +235,7 @@ object AgencyLake {
     */
   def ensureHistory(spark: SparkSession, sfDir: String): String = synchronized {
     val root = historyRoot(sfDir)
-    val fs = FileSystem.get(
-      new java.net.URI(s"file://$root"),
-      spark.sessionState.newHadoopConf())
+    val fs = LakeFs(spark).fs(s"file://$root")
     if (!fs.exists(new Path(root, "_SUCCESS"))) {
       historyDates.indices
         .map(historySnapshot(spark, sfDir, _))

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.dsv2.LakeFs
+
 /** Small-file compaction — the lake-maintenance operator every
   * long-running partitioned lake needs (the reference's weekly gzip drops
   * land one file per dataset per week, `load.go:19-21`; a year of weeks ×
@@ -37,7 +39,7 @@ object Compact {
   def partitionBytes(spark: SparkSession, dir: String,
                      partitionCol: String): Map[String, Long] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LakeFs(spark).fs(p)
     fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
       .map { d =>

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.dsv2.LakeFs
+
 /** Partition retention / expiry — the other half of lake maintenance
   * (with [[Compact]]): a weekly-snapshot lake (the reference keeps every
   * `importdate=` drop forever, `load.go:19-21`) grows without bound
@@ -28,7 +30,7 @@ object Retention {
   def expire(spark: SparkSession, dir: String, partitionCol: String,
              keepFrom: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LakeFs(spark).fs(p)
     val prefix = partitionCol + "="
     val expired = fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))

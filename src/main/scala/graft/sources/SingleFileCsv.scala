@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+
+import graft.sources.dsv2.LakeFs
 
 /** Single-file CSV sink with a stable output name — the reference's result
   * contract (reference: agency-delta.go:44-95 renames Athena's
@@ -21,7 +23,7 @@ object SingleFileCsv {
             header: Boolean = true, delimiter: String = ","): String = {
     val spark = df.sparkSession
     val out = new Path(dir)
-    val fs = FileSystem.get(out.toUri, spark.sessionState.newHadoopConf())
+    val fs = LakeFs(spark).fs(out)
     val tmp = new Path(dir, s"_tmp_${fileName.replace('/', '_')}")
     df.coalesce(1)
       .write.mode("overwrite")

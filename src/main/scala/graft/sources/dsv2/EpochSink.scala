@@ -1,11 +1,9 @@
 package graft.sources.dsv2
 
-import java.net.URI
 import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -53,13 +51,14 @@ class EpochSink extends TableProvider {
     val path = opts.get("path")
     require(path != null, "EpochSink requires a 'path' option")
     new EpochSinkTable(path, schema,
-      Option(opts.get("clusterby")), Option(opts.get("orderby")))
+      Option(opts.get("clusterby")), Option(opts.get("orderby")))(
+      LakeFs.active())
   }
 }
 
 class EpochSinkTable(root: String, writeSchema: StructType,
-                     clusterBy: Option[String], orderBy: Option[String])
-    extends Table with SupportsWrite {
+                     clusterBy: Option[String], orderBy: Option[String])(
+    implicit lfs: LakeFs) extends Table with SupportsWrite {
   override def name(): String = s"graft_epoch_sink($root)"
   override def schema(): StructType = writeSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -96,10 +95,10 @@ class EpochSinkTable(root: String, writeSchema: StructType,
 case class EpochFileMessage(stagedPath: String, rows: Long)
     extends WriterCommitMessage
 
-class EpochStreamingWrite(root: String, schema: StructType)
+class EpochStreamingWrite(root: String, schema: StructType)(
+    implicit lfs: LakeFs)
     extends StreamingWrite {
-  private def fs: FileSystem =
-    FileSystem.get(URI.create(root), new Configuration())
+  private def fs: FileSystem = lfs.fs(root)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
@@ -154,7 +153,7 @@ class EpochStreamingWrite(root: String, schema: StructType)
   }
 }
 
-class EpochWriterFactory(root: String, schema: StructType)
+class EpochWriterFactory(root: String, schema: StructType)(implicit lfs: LakeFs)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
@@ -167,7 +166,7 @@ class EpochWriterFactory(root: String, schema: StructType)
       // incremented, and abort must still close + delete it then
       private var opened = false
       private lazy val out = {
-        val f = FileSystem.get(URI.create(root), new Configuration())
+        val f = lfs.fs(root)
         f.mkdirs(staged.getParent)
         val stream = f.create(staged, true)
         opened = true
@@ -209,8 +208,7 @@ class EpochWriterFactory(root: String, schema: StructType)
           // commit was somehow reached): don't publish a partial file
           if (opened) {
             try out.close() catch { case _: java.io.IOException => () }
-            FileSystem.get(URI.create(root), new Configuration())
-              .delete(staged, false)
+            lfs.fs(root).delete(staged, false)
           }
           EpochFileMessage(null, 0L) // nothing staged for this partition
         }
@@ -219,8 +217,7 @@ class EpochWriterFactory(root: String, schema: StructType)
         // unconditional on rows: a file created by the first (failed)
         // write is residue the no-staging-leftovers invariant forbids
         try out.close() catch { case _: java.io.IOException => () }
-        FileSystem.get(URI.create(root), new Configuration())
-          .delete(staged, false)
+        lfs.fs(root).delete(staged, false)
       }
       override def close(): Unit = ()
     }

@@ -2,7 +2,6 @@ package graft.sources.dsv2
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, Table, TableCatalog, TableChange, TableInfo}
@@ -32,6 +31,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog {
   private var catalogName: String = _
   private var root: String = _
+  private implicit var lfs: LakeFs = _
 
   override def initialize(name: String,
                           options: CaseInsensitiveStringMap): Unit = {
@@ -39,6 +39,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     root = options.get("root")
     require(root != null,
       s"catalog $name requires spark.sql.catalog.$name.root")
+    lfs = LakeFs.active()
   }
 
   override def name(): String = catalogName
@@ -54,7 +55,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     new Path((root +: ident.namespace.toSeq :+ ident.name).mkString("/"))
   }
 
-  private def fs = new Path(root).getFileSystem(new Configuration())
+  private def fs = lfs.fs(root)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = new Path((root +: namespace.toSeq).mkString("/"))

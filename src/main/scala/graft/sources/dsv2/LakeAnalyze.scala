@@ -219,7 +219,8 @@ object LakeAnalyze {
   }
 
   /** Run the backfill; returns (files amended, facts added). */
-  def analyze(spark: SparkSession, dir: String): (Int, Int) = {
+  def analyze(spark: SparkSession, dir: String)(
+      implicit lfs: LakeFs): (Int, Int) = {
     val head = LakeLog.current(dir).getOrElse(
       throw new IllegalStateException(s"$dir has no snapshot log"))
     val schema = LakeTableIO.tableSchema(dir)

@@ -57,7 +57,7 @@ object LakeBloom {
   val Hashes = 6
 
   /** Configured bloom columns of a table (empty when unset). */
-  def configured(dir: String): Seq[String] =
+  def configured(dir: String)(implicit lfs: LakeFs): Seq[String] =
     LakeTableIO.tableProps(dir).get(ColKey).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 

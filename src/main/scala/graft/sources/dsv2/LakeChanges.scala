@@ -40,7 +40,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * added or DV'd (manifest stats prune pushed-filter-excluded files
   * first); nothing ever scans the table.
   */
-class LakeChangesTable(tableName: String, val dir: String) extends Table
+class LakeChangesTable(tableName: String, val dir: String)(
+    implicit lfs: LakeFs) extends Table
     with SupportsRead {
 
   override def name(): String = tableName
@@ -78,7 +79,7 @@ class LakeChangesScanBuilder(dir: String, cdcSchema: StructType,
                              startingVersion: Option[Long],
                              endingVersion: Option[Long],
                              skipReplaceCommits: Boolean,
-                             pacing: StreamPacing)
+                             pacing: StreamPacing)(implicit lfs: LakeFs)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
   private var projected: StructType = cdcSchema
@@ -103,7 +104,7 @@ class LakeChangesScan(dir: String, projected: StructType,
                       startingVersion: Option[Long],
                       endingVersion: Option[Long],
                       skipReplaceCommits: Boolean,
-                      pacing: StreamPacing)
+                      pacing: StreamPacing)(implicit lfs: LakeFs)
     extends Scan with Batch {
   override def readSchema(): StructType = projected
   override def toBatch: Batch = this

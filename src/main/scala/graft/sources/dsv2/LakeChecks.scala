@@ -67,7 +67,7 @@ object LakeChecks {
     * Any uncertainty — legacy constraint without a watermark,
     * unreadable marker — disarms (the scan runs; merely slower).
     */
-  def pruneArmed(dir: String): Boolean = {
+  def pruneArmed(dir: String)(implicit lfs: LakeFs): Boolean = {
     val props = LakeTableIO.tableProps(dir)
     val checks = fromProps(props)
     if (checks.isEmpty) return false
@@ -79,7 +79,7 @@ object LakeChecks {
   }
 
   /** Declared constraints of a table: (name, SQL text), name-sorted. */
-  def configured(dir: String): Seq[(String, String)] =
+  def configured(dir: String)(implicit lfs: LakeFs): Seq[(String, String)] =
     fromProps(LakeTableIO.tableProps(dir))
 
   /** [[configured]] over the STRICT props reader: a torn/unreadable
@@ -87,13 +87,14 @@ object LakeChecks {
     * enforcement consumer must fail the write loud rather than
     * silently un-enforce a declared guarantee.
     */
-  def configuredStrict(dir: String): Seq[(String, String)] =
+  def configuredStrict(dir: String)(
+      implicit lfs: LakeFs): Seq[(String, String)] =
     fromProps(LakeTableIO.tablePropsStrict(dir))
 
   /** The constraint set a write was PLANNED under, as a full
     * name → text map — what the commit-time guard compares against.
     */
-  def planSet(dir: String): Map[String, String] =
+  def planSet(dir: String)(implicit lfs: LakeFs): Map[String, String] =
     configuredStrict(dir).toMap
 
   /** Commit-time guard: fail loud when the live constraint set differs
@@ -105,7 +106,8 @@ object LakeChecks {
     * Compares full entries, never just names.
     */
   def requireUnchangedForWrite(dir: String,
-                               atPlan: Map[String, String]): Unit = {
+                               atPlan: Map[String, String])(
+      implicit lfs: LakeFs): Unit = {
     val now = configuredStrict(dir).toMap
     val offending = now.collect {
       case (n, t) if !atPlan.get(n).contains(t) => n

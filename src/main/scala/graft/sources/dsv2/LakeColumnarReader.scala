@@ -2,7 +2,6 @@ package graft.sources.dsv2
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.bytes.BytesUtils
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader, Dictionary, Encoding}
@@ -12,7 +11,6 @@ import org.apache.parquet.column.values.ValuesReader
 import org.apache.parquet.column.values.rle.RunLengthBitPackingHybridDecoder
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ParquetDecodingException
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -400,7 +398,7 @@ object LakeColumnarReader {
   * across batches.
   */
 class LakeColumnarPartitionReader(part: LakeInputPartition,
-                                  projected: StructType)
+                                  projected: StructType)(implicit lfs: LakeFs)
     extends PartitionReader[ColumnarBatch] {
   import LakeColumnarReader._
 
@@ -414,7 +412,7 @@ class LakeColumnarPartitionReader(part: LakeInputPartition,
       s"${part.path} — row-path routing bug")
 
   private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(part.path), new Configuration()))
+    lfs.input(new Path(part.path)))
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
   // EVALUATION columns (mirrors the row reader): the projection, plus
   // — when equality deletes apply to this file — any involved key

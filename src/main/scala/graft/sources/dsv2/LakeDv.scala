@@ -1,7 +1,5 @@
 package graft.sources.dsv2
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** Deletion-vector sidecar codec: one small file per (commit, data
@@ -18,17 +16,13 @@ import org.apache.hadoop.fs.Path
   * roaring's classic threshold). A DELETE of k scattered rows costs
   * ~2k bytes; a dense delete of a whole 10M-row file costs ~1.2 MiB
   * flat — both orders of magnitude under a JSON position list, which
-  * matters because readers fetch DV sidecars per scan. The legacy
-  * JSON form (`dv-*.dv.json`, pre-r11 vintage) keeps decoding;
-  * writers emit only the binary form.
+  * matters because readers fetch DV sidecars per scan.
   *
   * Readers subtract the UNION of a file's DV position sets; positions
   * decode sorted so the scan applies them with a single advancing
   * cursor (O(1) per row, no per-row set lookup).
   */
 object LakeDv {
-  private val mapper = new ObjectMapper()
-
   private val Magic = 0x47445631 // "GDV1"
   /** Array/bitmap crossover: past this cardinality the 8 KiB bitmap is
     * smaller than 2-byte array entries (4096 * 2 = 8 KiB).
@@ -36,10 +30,11 @@ object LakeDv {
   private val ArrayMax = 4096
 
   /** Write one DV sidecar for `dataFile`; returns the sidecar name. */
-  def write(dir: String, dataFile: String, positions: Seq[Long]): String = {
+  def write(dir: String, dataFile: String, positions: Seq[Long])(
+      implicit lfs: LakeFs): String = {
     require(positions.nonEmpty, s"empty deletion vector for $dataFile")
     val name = s"dv-${java.util.UUID.randomUUID()}.dv.bin"
-    val fs = new Path(dir).getFileSystem(new Configuration())
+    val fs = lfs.fs(dir)
     val sorted = positions.distinct.sorted.toArray
     require(sorted.head >= 0, s"negative position for $dataFile")
     val out = new java.io.DataOutputStream(
@@ -90,15 +85,11 @@ object LakeDv {
     * list from the manifest). Driver- or executor-side metadata read;
     * size ∝ deleted rows of ONE file.
     */
-  def positions(dir: String, dvFiles: Seq[String]): Array[Long] = {
+  def positions(dir: String, dvFiles: Seq[String])(
+      implicit lfs: LakeFs): Array[Long] = {
     if (dvFiles.isEmpty) return Array.empty
-    val fs = new Path(dir).getFileSystem(new Configuration())
-    val all = dvFiles.flatMap { f =>
-      val in = fs.open(new Path(dir, f))
-      val bytes = try in.readAllBytes() finally in.close()
-      if (f.endsWith(".dv.json")) decodeJson(bytes) else decodeBin(f, bytes)
-    }
-    all.distinct.sorted.toArray
+    dvFiles.flatMap(f => decodeBin(f, lfs.read(new Path(dir, f))))
+      .distinct.sorted.toArray
   }
 
   private def decodeBin(name: String, bytes: Array[Byte]): Seq[Long] = {
@@ -139,30 +130,5 @@ object LakeDv {
       c += 1
     }
     acc.toSeq
-  }
-
-  // pre-r11 vintage: {"file": ..., "positions": [..]}
-  private def decodeJson(bytes: Array[Byte]): Seq[Long] = {
-    val body = mapper.readValue(bytes,
-      classOf[java.util.Map[String, Object]])
-    body.get("positions").asInstanceOf[java.util.List[Number]]
-      .toArray(Array.empty[Number]).map(_.longValue()).toSeq
-  }
-
-  /** Legacy JSON writer — kept ONLY so specs can produce the vintage
-    * form and pin that readers keep decoding it.
-    */
-  private[graft] def writeLegacyJson(dir: String, dataFile: String,
-                                     positions: Seq[Long]): String = {
-    val name = s"dv-${java.util.UUID.randomUUID()}.dv.json"
-    val fs = new Path(dir).getFileSystem(new Configuration())
-    val body = new java.util.HashMap[String, Object]()
-    body.put("file", dataFile)
-    val arr = new java.util.ArrayList[java.lang.Long](positions.size)
-    positions.sorted.foreach(p => arr.add(java.lang.Long.valueOf(p)))
-    body.put("positions", arr)
-    val out = fs.create(new Path(dir, name), false)
-    try out.write(mapper.writeValueAsBytes(body)) finally out.close()
-    name
   }
 }

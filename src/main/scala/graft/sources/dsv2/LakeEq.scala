@@ -5,7 +5,6 @@ import java.util.{ArrayList, HashMap => JHashMap, List => JList, Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructType}
 
@@ -94,9 +93,9 @@ object LakeEq {
     * reclaimed by the expire vacuum like any unpublished file.
     */
   def write(dir: String, keyCols: Seq[String],
-            keys: Iterable[String]): String = {
+            keys: Iterable[String])(implicit lfs: LakeFs): String = {
     val name = s"eq-${java.util.UUID.randomUUID()}.json"
-    val fs = new Path(dir).getFileSystem(new Configuration())
+    val fs = lfs.fs(dir)
     val m = new JHashMap[String, Object]()
     val kc = new ArrayList[String](keyCols.size)
     keyCols.foreach(kc.add)
@@ -113,10 +112,9 @@ object LakeEq {
     * missing/torn eq sidecar under a live ref means deleted rows would
     * resurrect; there is no conservative direction.
     */
-  def read(dir: String, name: String): (Seq[String], Set[String]) = {
-    val fs = new Path(dir).getFileSystem(new Configuration())
-    val in = fs.open(new Path(dir, name))
-    val bytes = try in.readAllBytes() finally in.close()
+  def read(dir: String, name: String)(
+      implicit lfs: LakeFs): (Seq[String], Set[String]) = {
+    val bytes = lfs.read(new Path(dir, name))
     val m = mapper.readValue(bytes, classOf[JMap[String, Object]])
     val cols = m.get("keyCols") match {
       case l: JList[_] => l.asScala.map(_.toString).toSeq
@@ -140,7 +138,8 @@ object LakeEq {
     new java.util.concurrent.ConcurrentHashMap[String,
       (Seq[String], Set[String])]()
 
-  def cached(dir: String, name: String): (Seq[String], Set[String]) = {
+  def cached(dir: String, name: String)(
+      implicit lfs: LakeFs): (Seq[String], Set[String]) = {
     if (cache.size > 256) cache.clear()
     cache.computeIfAbsent(new Path(dir, name).toUri.toString,
       _ => read(dir, name))
@@ -175,7 +174,8 @@ object LakeEq {
     * drifted schema) — callers attach conservatively.
     */
   def scopeValues(dir: String, name: String,
-                  types: Seq[DataType]): Option[Seq[Array[Any]]] = {
+                  types: Seq[DataType])(
+      implicit lfs: LakeFs): Option[Seq[Array[Any]]] = {
     if (scopeCache.size > 256) scopeCache.clear()
     // failure classes memoize DIFFERENTLY: a None from a TRANSIENT
     // sidecar READ failure must not stick (it would silently degrade
@@ -234,7 +234,7 @@ object LakeEq {
     */
   def mayApply(dir: String, ref: EqRef, st: LakeStats.FileStats,
                tableCols: Array[LakeColumnRef],
-               schema: StructType): Boolean = {
+               schema: StructType)(implicit lfs: LakeFs): Boolean = {
     val bound =
       try bindKeys(schema, ref.keyCols)
       catch { case scala.util.control.NonFatal(_) => return true }
@@ -291,7 +291,8 @@ object LakeEq {
                        st: Option[LakeStats.FileStats],
                        tableCols: Array[LakeColumnRef],
                        schema: StructType,
-                       fileTuple: Option[Seq[String]] = None): Seq[EqRef] =
+                       fileTuple: Option[Seq[String]] = None)(
+      implicit lfs: LakeFs): Seq[EqRef] =
     applicable(refs, addV)
       // partition scoping: a tupled ref skips a SAME-SPEC file with
       // DIFFERENT slots (the keys' rows cannot live there — transform
@@ -321,7 +322,7 @@ object LakeEq {
                  stats: Map[String, LakeStats.FileStats],
                  parts: Map[String, Seq[String]],
                  tableCols: Array[LakeColumnRef],
-                 schema: StructType): Boolean =
+                 schema: StructType)(implicit lfs: LakeFs): Boolean =
     refs.nonEmpty && {
       val st = stats.get(name)
       !st.exists(_.addV >= 0) ||
@@ -355,7 +356,7 @@ object LakeEq {
                      stats: Map[String, LakeStats.FileStats],
                      parts: Map[String, Seq[String]],
                      tableCols: Array[LakeColumnRef],
-                     schema: StructType)
+                     schema: StructType)(implicit lfs: LakeFs)
       : (Map[String, Option[Seq[EqRef]]], Boolean) = {
     def applicableOf(n: String): Option[Seq[EqRef]] = {
       val st = stats.get(n)
@@ -387,7 +388,8 @@ object LakeEq {
     */
   def countMatches(dir: String, filePath: Path, refs: Seq[EqRef],
                    schema: StructType,
-                   deadPositions: Array[Long]): Option[Long] = {
+                   deadPositions: Array[Long])(
+      implicit lfs: LakeFs): Option[Long] = {
     if (refs.isEmpty) return Some(0L)
     if (refs.exists(_.n > ScopeInCap)) return None
     try {
@@ -405,8 +407,7 @@ object LakeEq {
         (colRefs, keys)
       }
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          filePath, new Configuration()))
+        lfs.input(filePath))
       try {
         val fileSchema = reader.getFooter.getFileMetaData.getSchema
         val involved = tests.flatMap(_._1).groupBy(_.name)
@@ -531,7 +532,8 @@ object LakeEq {
     * it airtight.
     */
   def requireUnchanged(dir: String, branch: Option[String],
-                       atPlan: Seq[EqRef], what: String): Unit = {
+                       atPlan: Seq[EqRef], what: String)(
+      implicit lfs: LakeFs): Unit = {
     val now = LakeLog.current(dir, branch).map(_.eqs).getOrElse(Seq.empty)
     if (now != atPlan)
       throw new java.util.ConcurrentModificationException(

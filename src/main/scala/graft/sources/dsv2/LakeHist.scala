@@ -50,7 +50,7 @@ object LakeHist {
     */
   val Bins = 16
 
-  def configured(dir: String): Seq[String] =
+  def configured(dir: String)(implicit lfs: LakeFs): Seq[String] =
     LakeTableIO.tableProps(dir).get(ColKey).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 

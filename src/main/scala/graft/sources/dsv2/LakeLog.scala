@@ -5,7 +5,6 @@ import java.util.{ArrayList, HashMap => JHashMap, List => JList, Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The snapshot log that turns [[LakeTable]] from a directory of files
@@ -206,16 +205,14 @@ object LakeLog {
   private def ld(dir: String, branch: Option[String]): Path =
     branch.fold(logDir(dir))(branchLogDir(dir, _))
 
-  private def fsFor(dir: String): FileSystem =
-    new Path(dir).getFileSystem(new Configuration())
-
   private def manifestName(v: Long): String = f"v$v%020d.json"
 
   private val ManifestRe = "^v(\\d{20})\\.json$".r
 
   /** Committed versions present in the (main or branch) log, ascending. */
-  def versions(dir: String, branch: Option[String] = None): Seq[Long] = {
-    val fs = fsFor(dir)
+  def versions(dir: String, branch: Option[String] = None)(
+      implicit lfs: LakeFs): Seq[Long] = {
+    val fs = lfs.fs(dir)
     val d = ld(dir, branch)
     logListings.incrementAndGet()
     if (!fs.exists(d)) Seq.empty
@@ -224,7 +221,8 @@ object LakeLog {
       .sorted
   }
 
-  def isLogged(dir: String): Boolean = versions(dir).nonEmpty
+  def isLogged(dir: String)(
+      implicit lfs: LakeFs): Boolean = versions(dir).nonEmpty
 
   /** Start of the CONTIGUOUS version suffix ending at head — the oldest
     * version from which every later manifest is still retained.
@@ -236,7 +234,7 @@ object LakeLog {
     * initial offset, backfill cursor validation) anchors here, not at
     * the global minimum.
     */
-  def contiguousStart(dir: String): Option[Long] = {
+  def contiguousStart(dir: String)(implicit lfs: LakeFs): Option[Long] = {
     val vs = versions(dir)
     if (vs.isEmpty) None
     else {
@@ -247,7 +245,8 @@ object LakeLog {
   }
 
   def snapshotAt(dir: String, version: Long,
-                 branch: Option[String] = None): Snapshot =
+                 branch: Option[String] = None)(
+      implicit lfs: LakeFs = LakeFs.active()): Snapshot =
     snapshotAtPruned(dir, version, branch, _ => true)
 
   /** [[snapshotAt]] with SEGMENT-LEVEL pruning: on a manifest-tree
@@ -262,8 +261,9 @@ object LakeLog {
     */
   def snapshotAtPruned(dir: String, version: Long,
                        branch: Option[String],
-                       keepSeg: SegRef => Boolean): Snapshot = {
-    val fs = fsFor(dir)
+                       keepSeg: SegRef => Boolean)(
+      implicit lfs: LakeFs): Snapshot = {
+    val fs = lfs.fs(dir)
     val p = new Path(ld(dir, branch), manifestName(version))
     require(fs.exists(p),
       s"no snapshot v$version in $dir${branch.fold("")(b => s"@$b")} " +
@@ -288,12 +288,14 @@ object LakeLog {
     * to the listing; correctness never depends on it. Branch heads use
     * the listing (branches are short-lived audit refs).
     */
-  def current(dir: String, branch: Option[String] = None): Option[Snapshot] =
+  def current(dir: String, branch: Option[String] = None)(
+      implicit lfs: LakeFs = LakeFs.active()): Option[Snapshot] =
     currentPruned(dir, branch, _ => true)
 
   /** [[current]] with segment-level pruning (see [[snapshotAtPruned]]). */
   def currentPruned(dir: String, branch: Option[String],
-                    keepSeg: SegRef => Boolean): Option[Snapshot] =
+                    keepSeg: SegRef => Boolean)(
+      implicit lfs: LakeFs): Option[Snapshot] =
     headVersion(dir, branch).map(snapshotAtPruned(dir, _, branch, keepSeg))
 
   /** DELTA-shaped snapshot read: the commit's inline fields (added/
@@ -305,7 +307,8 @@ object LakeLog {
     * manifests return the full snapshot (one read either way).
     */
   def snapshotAtDelta(dir: String, version: Long,
-                      branch: Option[String] = None): Snapshot = {
+                      branch: Option[String] = None)(
+      implicit lfs: LakeFs): Snapshot = {
     val skeleton = snapshotAtPruned(dir, version, branch, _ => false)
     // a flat manifest's "skeleton" IS the complete snapshot (keepSeg
     // only applies to segment lists) — one read, done
@@ -335,7 +338,7 @@ object LakeLog {
           // real corruption.
           case _: IllegalArgumentException => Set.empty // expired
           case e: java.io.IOException =>
-            if (!fsFor(dir).exists(new Path(ld(dir, branch),
+            if (!lfs.fs(dir).exists(new Path(ld(dir, branch),
                 manifestName(version - 1)))) Set.empty // vacuum race
             else throw e
         }
@@ -354,19 +357,22 @@ object LakeLog {
     * that only range over versions (CDC planning) should use on a
     * tree table (a full `current()` loads every segment).
     */
-  def currentVersion(dir: String): Option[Long] = headVersion(dir, None)
+  def currentVersion(dir: String)(
+      implicit lfs: LakeFs = LakeFs.active()): Option[Long] =
+    headVersion(dir, None)
 
   /** Head VERSION resolution (hint + forward probe / listing fallback)
     * without reading any manifest.
     */
   private def headVersion(dir: String,
-                          branch: Option[String]): Option[Long] =
+                          branch: Option[String])(
+      implicit lfs: LakeFs): Option[Long] =
     branch match {
       case Some(_) => versions(dir, branch).lastOption
       case None =>
         headHint(dir) match {
           case Some(h) =>
-            val fs = fsFor(dir)
+            val fs = lfs.fs(dir)
             if (!fs.exists(new Path(logDir(dir), manifestName(h))))
               versions(dir).lastOption // stale hint
             else {
@@ -396,8 +402,9 @@ object LakeLog {
     * takes its hint with its log dir.
     */
   def operations(dir: String,
-                 branch: Option[String] = None): Seq[(Long, String)] = {
-    val fs = fsFor(dir)
+                 branch: Option[String] = None)(
+      implicit lfs: LakeFs): Seq[(Long, String)] = {
+    val fs = lfs.fs(dir)
     val vs = versions(dir, branch)
     if (vs.isEmpty) return Seq.empty
     val p = new Path(ld(dir, branch), "_ops.json")
@@ -405,8 +412,7 @@ object LakeLog {
       try {
         if (!fs.exists(p)) Map.empty
         else {
-          val in = fs.open(p)
-          val bytes = try in.readAllBytes() finally in.close()
+          val bytes = lfs.read(p)
           mapper.readValue(bytes, classOf[JMap[String, Object]])
             .asScala.map { case (k, v) =>
               k.toLong -> String.valueOf(v) }.toMap
@@ -425,22 +431,12 @@ object LakeLog {
       try {
         val m = new JHashMap[String, Object]()
         entries.foreach { case (v, op) => m.put(v.toString, op) }
-        val tmp = new Path(ld(dir, branch),
-          s".tmp-ops-${java.util.UUID.randomUUID()}.json")
-        val out = fs.create(tmp, true)
-        try out.write(mapper.writeValueAsBytes(m)) finally out.close()
-        if ("file".equalsIgnoreCase(fs.getScheme))
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp.toUri.getPath),
-            java.nio.file.Paths.get(p.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else { fs.delete(p, false); fs.rename(tmp, p) }
+        lfs.replace(p, mapper.writeValueAsBytes(m))
       } catch { case _: Exception => () } // best-effort: derived data
     entries
   }
 
-  /** History-graft marker (`_log/_histgraft.json`): the highest MAIN
+  /** History-graft marker (`_log/_histgraft-<v>.json`): the highest MAIN
     * version at which non-linear history was introduced — a rollback
     * restoring a past state, or a fast_forward publishing branch
     * commits. Consumers that ride "every live row passed through an
@@ -450,25 +446,17 @@ object LakeLog {
     * between the two only over-disarms (the marker claims a graft
     * that never landed — conservative); an unreadable marker reports
     * Long.MaxValue for the same reason. Missing = no grafts ever.
+    * Markers are monotonically-NAMED write-once files; readers take the
+    * max over a listing, so an old marker is never invisible while a
+    * newer one lands.
     */
-  // Legacy single-file marker (pre-r14 layout): still READ for tables
-  // that carry one, never written anymore — its delete-then-rename
-  // update on non-local filesystems had a window where a concurrent
-  // historyGraftVersion saw NO marker ('no grafts ever') and wrongly
-  // re-armed contradiction pruning. New markers are monotonically-NAMED
-  // write-once files (`_histgraft-<version>.json`); readers take the
-  // max over a listing, so an old marker is never invisible while a
-  // newer one lands.
-  private def histGraftLegacyPath(dir: String): Path =
-    new Path(logDir(dir), "_histgraft.json")
-
   private val HistGraftPrefix = "_histgraft-"
 
   private def histGraftVersionedPath(dir: String, v: Long): Path =
     new Path(logDir(dir), f"$HistGraftPrefix$v%020d.json")
 
-  def historyGraftVersion(dir: String): Option[Long] = {
-    val fs = fsFor(dir)
+  def historyGraftVersion(dir: String)(implicit lfs: LakeFs): Option[Long] = {
+    val fs = lfs.fs(dir)
     try {
       val ld0 = logDir(dir)
       val versioned: Seq[Long] =
@@ -478,17 +466,7 @@ object LakeLog {
           .map(_.stripPrefix(HistGraftPrefix).stripSuffix(".json"))
           .map(s => s.toLongOption.getOrElse(Long.MaxValue)) // torn name:
           // conservative (claims a graft newer than any watermark)
-      val legacy: Option[Long] = {
-        val p = histGraftLegacyPath(dir)
-        if (!fs.exists(p)) None
-        else try {
-          val in = fs.open(p)
-          val bytes = try in.readAllBytes() finally in.close()
-          Some(mapper.readValue(bytes, classOf[JMap[String, Object]])
-            .get("version").asInstanceOf[Number].longValue())
-        } catch { case _: Exception => Some(Long.MaxValue) } // conservative
-      }
-      (versioned ++ legacy).maxOption
+      versioned.maxOption
     } catch { case _: Exception => Some(Long.MaxValue) } // conservative
   }
 
@@ -499,39 +477,25 @@ object LakeLog {
     * older markers are (best-effort) cleaned up, so concurrent readers
     * always see at least one marker ≥ the pre-existing maximum.
     */
-  private[graft] def noteHistoryGraft(dir: String, version: Long): Unit = {
-    val fs = fsFor(dir)
+  private[graft] def noteHistoryGraft(dir: String, version: Long)(
+      implicit lfs: LakeFs): Unit = {
+    val fs = lfs.fs(dir)
     val cur = historyGraftVersion(dir).getOrElse(-1L)
     if (cur >= version && cur != Long.MaxValue) return
     fs.mkdirs(logDir(dir))
     val noted =
       math.max(version, if (cur == Long.MaxValue) version else cur)
     val dest = histGraftVersionedPath(dir, noted)
-    if (!fs.exists(dest)) {
-      val m = new JHashMap[String, Object]()
-      m.put("version", java.lang.Long.valueOf(noted))
-      val tmp = new Path(logDir(dir),
-        s".tmp-histgraft-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, true)
-      try out.write(mapper.writeValueAsBytes(m)) finally out.close()
-      if ("file".equalsIgnoreCase(fs.getScheme))
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp.toUri.getPath),
-          java.nio.file.Paths.get(dest.toUri.getPath),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      else if (!fs.rename(tmp, dest)) {
-        // a concurrent graft may have placed the same versioned name —
-        // that marker serves identically; anything else fails loud
-        fs.delete(tmp, false)
-        if (!fs.exists(dest))
-          throw new java.io.IOException(
-            s"failed to record history graft for $dir")
-      }
-    }
-    // the new marker is visible: retiring older ones (and the legacy
-    // single-file marker) is pure cleanup — failures are harmless
-    // because readers take the max over whatever remains
+    // a concurrent graft may have placed the same versioned name — that
+    // marker serves identically; anything else fails loud
+    if (!fs.exists(dest) && !lfs.create(dest, mapper.writeValueAsBytes(
+          java.util.Map.of("version", java.lang.Long.valueOf(noted)))) &&
+        !fs.exists(dest))
+      throw new java.io.IOException(
+        s"failed to record history graft for $dir")
+    // the new marker is visible: retiring older ones is pure cleanup —
+    // failures are harmless because readers take the max over whatever
+    // remains
     try {
       fs.listStatus(logDir(dir)).foreach { st =>
         val n = st.getPath.getName
@@ -541,31 +505,19 @@ object LakeLog {
               .toLongOption.exists(_ < noted))
           fs.delete(st.getPath, false)
       }
-      // the legacy marker retires only when READABLE and covered by the
-      // new one — deleting an unreadable legacy file would downgrade
-      // its conservative Long.MaxValue claim to `noted`
-      val lp = histGraftLegacyPath(dir)
-      if (fs.exists(lp)) {
-        val in = fs.open(lp)
-        val bytes = try in.readAllBytes() finally in.close()
-        val v = mapper.readValue(bytes, classOf[JMap[String, Object]])
-          .get("version").asInstanceOf[Number].longValue()
-        if (v <= noted) fs.delete(lp, false)
-      }
     } catch { case _: Exception => () }
   }
 
   private def headHintPath(dir: String): Path =
     new Path(logDir(dir), "_head.json")
 
-  private def headHint(dir: String): Option[Long] =
+  private def headHint(dir: String)(implicit lfs: LakeFs): Option[Long] =
     try {
-      val fs = fsFor(dir)
+      val fs = lfs.fs(dir)
       val p = headHintPath(dir)
       if (!fs.exists(p)) None
       else {
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
+        val bytes = lfs.read(p)
         Some(mapper.readValue(bytes, classOf[JMap[String, Object]])
           .get("version").asInstanceOf[Number].longValue())
       }
@@ -575,27 +527,15 @@ object LakeLog {
     * of order (a LOWER hint just means an extra probe or two), and any
     * failure is swallowed — the listing fallback stays authoritative.
     */
-  private def writeHeadHint(dir: String, version: Long): Unit =
-    try {
-      val fs = fsFor(dir)
-      val tmp = new Path(logDir(dir),
-        s".tmp-head-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, true)
-      try out.write(mapper.writeValueAsBytes(java.util.Map.of(
-        "version", java.lang.Long.valueOf(version))))
-      finally out.close()
-      val dest = headHintPath(dir)
-      if ("file".equalsIgnoreCase(fs.getScheme))
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp.toUri.getPath),
-          java.nio.file.Paths.get(dest.toUri.getPath),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      else { fs.delete(dest, false); fs.rename(tmp, dest) }
-    } catch { case _: Exception => () }
+  private def writeHeadHint(dir: String, version: Long)(
+      implicit lfs: LakeFs): Unit =
+    try lfs.replace(headHintPath(dir), mapper.writeValueAsBytes(
+      java.util.Map.of("version", java.lang.Long.valueOf(version))))
+    catch { case _: Exception => () }
 
   /** Latest snapshot whose commit time is <= `tsMs` (timestamp travel). */
-  def snapshotAsOfTime(dir: String, tsMs: Long): Snapshot = {
+  def snapshotAsOfTime(dir: String, tsMs: Long)(
+      implicit lfs: LakeFs): Snapshot = {
     val all = versions(dir).map(snapshotAt(dir, _))
     all.filter(_.timestampMs <= tsMs).lastOption.getOrElse(
       throw new IllegalArgumentException(
@@ -897,9 +837,9 @@ object LakeLog {
   }
 
   /** Raw data-file listing (log-oblivious) — bootstrap + legacy reads. */
-  def rawDataFiles(dir: String): Seq[String] = {
+  def rawDataFiles(dir: String)(implicit lfs: LakeFs): Seq[String] = {
     val p = new Path(dir)
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -999,9 +939,9 @@ object LakeLog {
              // a lost version race would let unenforced rows publish
              // on the retry). Throwing aborts the commit; the caller's
              // cleanup path removes the published-but-uncommitted files.
-             prePublish: () => Unit = () => ())
+             prePublish: () => Unit = () => ())(implicit lfs: LakeFs)
       : Snapshot = {
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     fs.mkdirs(ld(dir, branch))
     // the update-pairing annotation only ever references THIS commit's
     // own artifacts — a dangling reference would mislabel CDC events
@@ -1218,45 +1158,16 @@ object LakeLog {
   private def now(prev: Option[Long]): Long =
     math.max(System.currentTimeMillis(), prev.map(_ + 1).getOrElse(0L))
 
-  /** Atomically create `dest` from staged `tmp`, failing (false) when
-    * `dest` already exists — the single arbitration primitive the whole
-    * log rests on. Scheme-dependent, because the Hadoop `rename` API
-    * does NOT guarantee no-overwrite everywhere: on the local
-    * filesystem it degrades to POSIX rename(2), which silently
-    * OVERWRITES an existing destination — two racing writers would both
-    * "win" a version and one manifest would vanish (caught live by
-    * LakeLogConcurrencySpec under 32-way contention). So:
-    *
-    *   - `file://`: hard-link (link(2)) — atomic create-if-absent by
-    *     POSIX contract;
-    *   - everything else (HDFS-class): `rename` without overwrite is
-    *     atomic at the namenode and returns false on an existing
-    *     destination. (An object store without atomic rename needs a
-    *     conditional-PUT flavor of this method — the one primitive a
-    *     port must supply.)
-    */
-  private def atomicCreateFrom(fs: FileSystem, tmp: Path,
-                               dest: Path): Boolean =
-    if ("file".equalsIgnoreCase(fs.getScheme)) {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dest.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else fs.rename(tmp, dest)
-
   /** Stage + atomic create-if-absent; None when the version was taken. */
   private def tryPublish(fs: FileSystem, dir: String, s: Snapshot,
-                         branch: Option[String]): Option[Snapshot] = {
+                         branch: Option[String])(
+      implicit lfs: LakeFs): Option[Snapshot] = {
     val d = ld(dir, branch)
     val dest = new Path(d, manifestName(s.version))
     if (fs.exists(dest)) return None
     val tmp = new Path(d, s".tmp-${java.util.UUID.randomUUID()}.json")
     val (written, createdSegs) = writeManifest(fs, dir, tmp, s)
-    val won = atomicCreateFrom(fs, tmp, dest)
+    val won = lfs.createFrom(tmp, dest)
     fs.delete(tmp, false)
     if (won) {
       // keep MAIN head resolution O(1): refresh the hint per commit
@@ -1280,12 +1191,13 @@ object LakeLog {
     * COPY of the head manifest — that version number is the fork point
     * [[fastForward]] later validates against.
     */
-  def createBranch(dir: String, name: String): Snapshot = {
+  def createBranch(dir: String, name: String)(
+      implicit lfs: LakeFs): Snapshot = {
     val head = current(dir).getOrElse(throw new IllegalStateException(
       s"$dir has no snapshot log to branch"))
     require(!tags(dir).contains(name),
       s"'$name' is already a tag in $dir")
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     require(!fs.exists(branchLogDir(dir, name)),
       s"branch '$name' already exists in $dir")
     fs.mkdirs(branchLogDir(dir, name))
@@ -1295,8 +1207,8 @@ object LakeLog {
   }
 
   /** Live branches: name → head version. */
-  def branches(dir: String): Map[String, Long] = {
-    val fs = fsFor(dir)
+  def branches(dir: String)(implicit lfs: LakeFs): Map[String, Long] = {
+    val fs = lfs.fs(dir)
     val root = new Path(logDir(dir), "branches")
     if (!fs.exists(root)) Map.empty
     else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { s =>
@@ -1305,8 +1217,8 @@ object LakeLog {
     }.toMap
   }
 
-  def dropBranch(dir: String, name: String): Boolean =
-    fsFor(dir).delete(branchLogDir(dir, name), true)
+  def dropBranch(dir: String, name: String)(implicit lfs: LakeFs): Boolean =
+    lfs.fs(dir).delete(branchLogDir(dir, name), true)
 
   /** Publish a branch onto main — the write-audit-publish commit. Only
     * valid when main still sits at the branch's fork point (same
@@ -1317,7 +1229,7 @@ object LakeLog {
     * — the first taken version aborts the publish. Returns the number
     * of commits published; the branch is dropped on success.
     */
-  def fastForward(dir: String, name: String): Int = {
+  def fastForward(dir: String, name: String)(implicit lfs: LakeFs): Int = {
     val bvs = versions(dir, Some(name))
     require(bvs.nonEmpty, s"no branch '$name' in $dir")
     val fork = bvs.head
@@ -1328,7 +1240,7 @@ object LakeLog {
         s"cannot fast-forward '$name' in $dir: main advanced to " +
           s"v${mainHead.version} past the fork point v$fork — " +
           "re-branch and replay")
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     // graft marker FIRST (see rollback): branch commits may hold rows
     // written before a constraint was declared+validated on main
     if (bvs.tail.nonEmpty) noteHistoryGraft(dir, bvs.last)
@@ -1374,46 +1286,39 @@ object LakeLog {
     * makes racing creates pick one winner). Tagged snapshots survive
     * [[expire]].
     */
-  def tag(dir: String, name: String, version: Long): Unit = {
+  def tag(dir: String, name: String, version: Long)(
+      implicit lfs: LakeFs): Unit = {
     snapshotAt(dir, version) // must exist
     require(!branches(dir).contains(name),
       s"'$name' is already a branch in $dir")
-    val fs = fsFor(dir)
-    val tmp = new Path(logDir(dir),
-      s".tmp-ref-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(
-      java.util.Map.of("name", name, "version",
-        java.lang.Long.valueOf(version))))
-    finally out.close()
     val dest = tagPath(dir, name)
-    val won = !fs.exists(dest) && atomicCreateFrom(fs, tmp, dest)
-    fs.delete(tmp, false)
+    val won = !lfs.fs(dest).exists(dest) && lfs.create(dest,
+      mapper.writeValueAsBytes(java.util.Map.of("name", name, "version",
+        java.lang.Long.valueOf(version))))
     if (!won)
       throw new IllegalStateException(
         s"tag '$name' already exists in $dir (tags are immutable — " +
           "dropTag first to move it)")
   }
 
-  def dropTag(dir: String, name: String): Boolean =
-    fsFor(dir).delete(tagPath(dir, name), false)
+  def dropTag(dir: String, name: String)(implicit lfs: LakeFs): Boolean =
+    lfs.fs(dir).delete(tagPath(dir, name), false)
 
   /** All tags: name → pinned version. */
-  def tags(dir: String): Map[String, Long] = {
-    val fs = fsFor(dir)
+  def tags(dir: String)(implicit lfs: LakeFs): Map[String, Long] = {
+    val fs = lfs.fs(dir)
     val ld = logDir(dir)
     if (!fs.exists(ld)) Map.empty
     else fs.listStatus(ld).toSeq.flatMap(s =>
       TagRe.findFirstMatchIn(s.getPath.getName).map { m =>
-        val in = fs.open(s.getPath)
-        val bytes = try in.readAllBytes() finally in.close()
+        val bytes = lfs.read(s.getPath)
         val j = mapper.readValue(bytes, classOf[JMap[String, Object]])
         m.group(1) -> j.get("version").asInstanceOf[Number].longValue()
       }).toMap
   }
 
   /** Resolve a version ref: a numeric snapshot id, or a tag name. */
-  def resolve(dir: String, ref: String): Long =
+  def resolve(dir: String, ref: String)(implicit lfs: LakeFs): Long =
     ref.toLongOption.getOrElse(tags(dir).getOrElse(ref,
       throw new IllegalArgumentException(
         s"'$ref' is neither a numeric snapshot id nor a tag in $dir " +
@@ -1444,36 +1349,22 @@ object LakeLog {
     * back to the log scan.
     */
   def recordCommittedEpoch(dir: String, queryId: String,
-                           epochId: Long): Unit = {
-    val fs = fsFor(dir)
-    val tmp = new Path(logDir(dir),
-      s".tmp-stream-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(java.util.Map.of(
-      "queryId", queryId, "epoch", java.lang.Long.valueOf(epochId))))
-    finally out.close()
-    val dest = epochRefPath(dir, queryId)
-    if ("file".equalsIgnoreCase(fs.getScheme))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dest.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else { fs.delete(dest, false); fs.rename(tmp, dest) }
-  }
+                           epochId: Long)(implicit lfs: LakeFs): Unit =
+    lfs.replace(epochRefPath(dir, queryId), mapper.writeValueAsBytes(
+      java.util.Map.of("queryId", queryId,
+        "epoch", java.lang.Long.valueOf(epochId))))
 
   /** Does the query's epoch REF alone already record `epoch` (or later)?
     * Used by [[expire]] to decide whether a marker manifest is still a
     * load-bearing retention promise.
     */
   private def lastEpochRefCovers(dir: String, queryId: String,
-                                 epoch: Long): Boolean =
+                                 epoch: Long)(implicit lfs: LakeFs): Boolean =
     try {
-      val fs = fsFor(dir)
+      val fs = lfs.fs(dir)
       val p = epochRefPath(dir, queryId)
       fs.exists(p) && {
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
+        val bytes = lfs.read(p)
         mapper.readValue(bytes, classOf[JMap[String, Object]])
           .get("epoch").asInstanceOf[Number].longValue() >= epoch
       }
@@ -1489,15 +1380,15 @@ object LakeLog {
     * newest marker manifest, so the scan finds it even after a vacuum.
     */
   def lastCommittedEpoch(dir: String, queryId: String,
-                         branch: Option[String] = None): Option[Long] = {
-    val fs = fsFor(dir)
+                         branch: Option[String] = None)(
+      implicit lfs: LakeFs): Option[Long] = {
+    val fs = lfs.fs(dir)
     val ref =
       try {
         val p = epochRefPath(dir, queryId)
         if (!fs.exists(p)) None
         else {
-          val in = fs.open(p)
-          val bytes = try in.readAllBytes() finally in.close()
+          val bytes = lfs.read(p)
           val j = mapper.readValue(bytes, classOf[JMap[String, Object]])
           Some(j.get("epoch").asInstanceOf[Number].longValue())
         }
@@ -1517,7 +1408,7 @@ object LakeLog {
     * equals the old snapshot's — history is preserved (the rollback is
     * itself a version), so the rolled-past states stay auditable.
     */
-  def rollback(dir: String, version: Long): Snapshot = {
+  def rollback(dir: String, version: Long)(implicit lfs: LakeFs): Snapshot = {
     val target = snapshotAt(dir, version)
     val head = current(dir).getOrElse(
       throw new IllegalStateException(s"$dir has no log to roll back"))
@@ -1568,12 +1459,13 @@ object LakeLog {
     sys.props.get("graft.lake.expire.grace.ms").map(_.toLong)
       .getOrElse(10L * 60 * 1000)
 
-  def expire(dir: String, keepLast: Int): (Int, Int) =
+  def expire(dir: String, keepLast: Int)(implicit lfs: LakeFs): (Int, Int) =
     expire(dir, keepLast, defaultExpireGraceMs)
 
-  def expire(dir: String, keepLast: Int, graceMs: Long): (Int, Int) = {
+  def expire(dir: String, keepLast: Int, graceMs: Long)(
+      implicit lfs: LakeFs): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the current snapshot")
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     val vs = versions(dir)
     if (vs.isEmpty) return (0, 0)
     val tagged = tags(dir).values.toSet
@@ -1661,13 +1553,12 @@ object LakeLog {
     * vacuum's orphan-candidate source; DVs never participate in
     * bootstrap).
     */
-  def rawDvFiles(dir: String): Seq[String] = {
+  def rawDvFiles(dir: String)(implicit lfs: LakeFs): Seq[String] = {
     val p = new Path(dir)
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && (s.getPath.getName.endsWith(".dv.json") ||
-        s.getPath.getName.endsWith(".dv.bin")))
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".dv.bin"))
       .map(_.getPath.getName)
       .sorted
   }
@@ -1675,9 +1566,9 @@ object LakeLog {
   /** Equality-delete sidecars on disk (the vacuum's orphan-candidate
     * source, like [[rawDvFiles]]; never part of bootstrap).
     */
-  def rawEqFiles(dir: String): Seq[String] = {
+  def rawEqFiles(dir: String)(implicit lfs: LakeFs): Seq[String] = {
     val p = new Path(dir)
-    val fs = fsFor(dir)
+    val fs = lfs.fs(dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("eq-") &&

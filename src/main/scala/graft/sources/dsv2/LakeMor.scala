@@ -4,7 +4,6 @@ import java.util.UUID
 
 import scala.collection.mutable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -46,7 +45,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * columns itself.
   */
 class LakeMorOperation(table: LakeTable,
-                       cmd: RowLevelOperation.Command)
+                       cmd: RowLevelOperation.Command)(implicit lfs: LakeFs)
     extends RowLevelOperation with SupportsDelta {
 
   // the eq-ref set the plan consumed — captured BEFORE the source
@@ -96,7 +95,8 @@ case class LakeDeltaMessage(staged: Seq[StagedLakeFile],
 
 class LakeDeltaWrite(dir: String, rowSchema: StructType, opName: String,
                      branch: Option[String],
-                     eqsAtPlan: () => Seq[LakeEq.EqRef] = () => Seq.empty)
+                     eqsAtPlan: () => Seq[LakeEq.EqRef] = () => Seq.empty)(
+    implicit lfs: LakeFs)
     extends DeltaWrite {
   // mid-write ADD/RE-DECLARE CONSTRAINT guard — same contract as
   // LakeWrite: the commit fails loud (nothing publishes) when a
@@ -113,7 +113,7 @@ class LakeDeltaWrite(dir: String, rowSchema: StructType, opName: String,
       new LakeDeltaWriterFactory(dir, rowSchema)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       val msgs = messages.collect { case m: LakeDeltaMessage => m }
       try LakeChecks.requireUnchangedForWrite(dir, checksAtPlan)
       catch { case e: Throwable =>
@@ -213,7 +213,7 @@ class LakeDeltaWrite(dir: String, rowSchema: StructType, opName: String,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       messages.collect { case m: LakeDeltaMessage =>
         (m.staged ++ m.stagedUpdates).foreach { s =>
           try fs.delete(new Path(s.stagedPath), false)
@@ -224,7 +224,8 @@ class LakeDeltaWrite(dir: String, rowSchema: StructType, opName: String,
   }
 }
 
-class LakeDeltaWriterFactory(dir: String, rowSchema: StructType)
+class LakeDeltaWriterFactory(dir: String, rowSchema: StructType)(
+    implicit lfs: LakeFs)
     extends DeltaWriterFactory {
   // constructed on the DRIVER (this factory is built there and
   // serialized to tasks): the inner writer resolves driver-only state

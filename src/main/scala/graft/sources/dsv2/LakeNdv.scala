@@ -56,7 +56,7 @@ object LakeNdv {
   val K = 256
 
   /** Configured NDV columns of a table (empty when unset). */
-  def configured(dir: String): Seq[String] =
+  def configured(dir: String)(implicit lfs: LakeFs): Seq[String] =
     LakeTableIO.tableProps(dir).get(ColKey).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 

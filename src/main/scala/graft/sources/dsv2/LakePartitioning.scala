@@ -110,14 +110,15 @@ object LakePartitioning {
   val SpecsKey = "partition.specs"
 
   /** The table's CURRENT spec, empty for unpartitioned tables. */
-  def specOf(dir: String): Seq[PTransform] =
+  def specOf(dir: String)(implicit lfs: LakeFs): Seq[PTransform] =
     LakeTableIO.tableProps(dir).get(SpecKey)
       .map(parse).getOrElse(Seq.empty)
 
   /** All specs ever active, oldest first; the last is current. A table
     * that never evolved has exactly one (or none if unpartitioned).
     */
-  def specsOf(dir: String): IndexedSeq[Seq[PTransform]] = {
+  def specsOf(dir: String)(
+      implicit lfs: LakeFs): IndexedSeq[Seq[PTransform]] = {
     val props = LakeTableIO.tableProps(dir)
     props.get(SpecsKey) match {
       // -1 keeps trailing empties: an UNPARTITION evolution step is the

@@ -21,7 +21,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * file in a partitioned table (hand-dropped into the dir) groups
   * under all-null transform values rather than vanishing.
   */
-class LakePartitionsTable(tableName: String, dir: String) extends Table
+class LakePartitionsTable(tableName: String, dir: String)(
+    implicit lfs: LakeFs) extends Table
     with SupportsRead {
 
   private val allSpecs = LakePartitioning.specsOf(dir)
@@ -161,7 +162,8 @@ class LakePartitionsTable(tableName: String, dir: String) extends Table
   * the snapshot (stat-less legacy files cost one footer read each,
   * the same fallback the partitions table takes).
   */
-class LakeFilesTable(tableName: String, dir: String) extends Table
+class LakeFilesTable(tableName: String, dir: String)(
+    implicit lfs: LakeFs) extends Table
     with SupportsRead {
 
   override def name(): String = tableName
@@ -224,7 +226,7 @@ class LakeFilesTable(tableName: String, dir: String) extends Table
           files.map(_.getName), eqs, stats, parts, tcols, tschema)
         // one listing for every size — O(1) remote calls, not O(files)
         val path = new org.apache.hadoop.fs.Path(dir)
-        val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = lfs.fs(path)
         val sizes: Map[String, Long] =
           try fs.listStatus(path)
             .map(st => st.getPath.getName -> st.getLen).toMap
@@ -295,7 +297,8 @@ class LakeFilesTable(tableName: String, dir: String) extends Table
   * debt behind every NULL. Driver metadata only (eq
   * facts live in the manifest; DV sidecars are O(positions) reads).
   */
-class LakeDeletesTable(tableName: String, dir: String) extends Table
+class LakeDeletesTable(tableName: String, dir: String)(
+    implicit lfs: LakeFs) extends Table
     with SupportsRead {
 
   override def name(): String = tableName

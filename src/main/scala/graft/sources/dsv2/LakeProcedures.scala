@@ -45,7 +45,8 @@ object LakeProcedures {
     */
   private def evolveSpec(dir: String,
       step: Seq[LakePartitioning.PTransform] =>
-        Seq[LakePartitioning.PTransform]): GenericInternalRow = {
+        Seq[LakePartitioning.PTransform])(
+      implicit lfs: LakeFs): GenericInternalRow = {
     val specs = LakePartitioning.specsOf(dir)
     val cur =
       if (specs.isEmpty) Seq.empty[LakePartitioning.PTransform]
@@ -66,7 +67,8 @@ object LakeProcedures {
   }
 
   /** Resolve `system.<name>` for a catalog rooted at `root`. */
-  def load(root: String, ident: Identifier): UnboundProcedure = {
+  def load(root: String, ident: Identifier)(
+      implicit lfs: LakeFs): UnboundProcedure = {
     require(ident.namespace.sameElements(Array(Namespace)),
       s"graft_lake procedures live in the '$Namespace' namespace, got " +
         ident.namespace.mkString("."))

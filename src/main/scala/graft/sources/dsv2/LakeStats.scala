@@ -2,10 +2,8 @@ package graft.sources.dsv2
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -170,12 +168,12 @@ object LakeStats {
     * (vanished, foreign format) simply gets no entry: planning falls
     * back to its footer like any legacy file.
     */
-  def harvest(dir: String, names: Seq[String]): Map[String, FileStats] = {
-    val conf = new Configuration()
+  def harvest(dir: String, names: Seq[String])(
+      implicit lfs: LakeFs): Map[String, FileStats] = {
     def one(name: String): Option[(String, FileStats)] =
       try {
         val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(dir, name), conf))
+          lfs.input(new Path(dir, name)))
         try Some(name -> harvestOne(reader)) finally reader.close()
       } catch { case _: Exception => None }
     // the reads are independent footer I/O — a bounded parallel sweep

@@ -69,7 +69,8 @@ class LakeMicroBatchStream(dir: String, projected: StructType,
                            maxFilesPerTrigger: Option[Int] = None,
                            cdc: Boolean = false,
                            consumed: Array[Filter] = Array.empty,
-                           proven: Array[Filter] = Array.empty)
+                           proven: Array[Filter] = Array.empty)(
+    implicit lfs: LakeFs)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** The limit Spark hands back to `latestOffset` on ordinary triggers:

@@ -6,14 +6,12 @@ import java.util.UUID
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
@@ -63,7 +61,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class LakeTable(tableName: String, val dir: String,
                 val pinnedVersion: Option[Long] = None,
-                val branch: Option[String] = None) extends Table
+                val branch: Option[String] = None)(
+    implicit lfs: LakeFs) extends Table
     with SupportsRead with SupportsWrite with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
@@ -239,7 +238,8 @@ class LakeTable(tableName: String, val dir: String,
   * not for NOT MATCHED BY SOURCE deletes, which must see every group).
   */
 class LakeRowLevelOperation(table: LakeTable,
-                            cmd: RowLevelOperation.Command)
+                            cmd: RowLevelOperation.Command)(
+    implicit lfs: LakeFs)
     extends RowLevelOperation {
   // the live scan: its (possibly runtime-narrowed) covered-file set is
   // the replace-write's delete set, read at commit time
@@ -295,7 +295,8 @@ class LakeRowLevelScan(tableSchema: StructType, allFiles: Seq[String],
                        stats: Map[String, LakeStats.FileStats] = Map.empty,
                        dir: String = "",
                        eqs: Seq[LakeEq.EqRef] = Seq.empty,
-                       parts: Map[String, Seq[String]] = Map.empty)
+                       parts: Map[String, Seq[String]] = Map.empty)(
+    implicit lfs: LakeFs)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -383,7 +384,8 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
                       skipChangeCommits: Boolean = false,
                       startingVersion: Option[Long] = None,
                       branch: Option[String] = None,
-                      pacing: StreamPacing = StreamPacing())
+                      pacing: StreamPacing = StreamPacing())(
+    implicit lfs: LakeFs)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
@@ -984,7 +986,8 @@ class LakeScan(dir: String, files: Seq[Path], tableSchema: StructType,
                // the ref list the BUILDER's eqFree sweep proved
                // attach-free before offering LIMIT/TopN bounding
                // (None when no bound was pushed) — see boundEqSafe
-               boundJudgedEqs: Option[Seq[LakeEq.EqRef]] = None)
+               boundJudgedEqs: Option[Seq[LakeEq.EqRef]] = None)(
+    implicit lfs: LakeFs)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
@@ -1514,7 +1517,7 @@ class LakeScan(dir: String, files: Seq[Path], tableSchema: StructType,
   }
 }
 
-class LakeReaderFactory(projected: StructType)
+class LakeReaderFactory(projected: StructType)(implicit lfs: LakeFs)
     extends PartitionReaderFactory {
 
   /** Columnar when the scan shape admits it (flat primitives, no CDC
@@ -1539,7 +1542,7 @@ class LakeReaderFactory(projected: StructType)
     val part = p.asInstanceOf[LakeInputPartition]
     new PartitionReader[InternalRow] {
       private val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(part.path), new Configuration()))
+        lfs.input(new Path(part.path)))
       // the projection is resolved against the FILE footer schema —
       // by FIELD ID when the file carries ids (strict: a renamed
       // column keeps resolving, a dropped-and-re-added name can never
@@ -1969,7 +1972,8 @@ class LakeWrite(dir: String, writeSchema: StructType,
                 // the CURRENT set to still equal it; empty for plain
                 // appends/overwrites, where it degenerates to the
                 // still-none check
-                eqsAtPlan: () => Seq[LakeEq.EqRef] = () => Seq.empty)
+                eqsAtPlan: () => Seq[LakeEq.EqRef] = () => Seq.empty)(
+    implicit lfs: LakeFs)
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
@@ -2065,7 +2069,7 @@ class LakeWrite(dir: String, writeSchema: StructType,
 
       override def commit(epochId: Long,
                           messages: Array[WriterCommitMessage]): Unit = {
-        val fs = new Path(dir).getFileSystem(new Configuration())
+        val fs = lfs.fs(dir)
         val collected = messages.collect {
           case LakeFileMessage(staged) => staged
         }.flatten
@@ -2136,7 +2140,7 @@ class LakeWrite(dir: String, writeSchema: StructType,
 
       override def abort(epochId: Long,
                          messages: Array[WriterCommitMessage]): Unit = {
-        val fs = new Path(dir).getFileSystem(new Configuration())
+        val fs = lfs.fs(dir)
         messages.collect { case LakeFileMessage(staged) =>
           staged.foreach { s =>
             try fs.delete(new Path(s.stagedPath), false)
@@ -2151,7 +2155,7 @@ class LakeWrite(dir: String, writeSchema: StructType,
       new LakeWriterFactory(dir, writeSchema)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       val collected = messages.collect {
         case LakeFileMessage(staged) => staged
       }.flatten
@@ -2277,7 +2281,7 @@ class LakeWrite(dir: String, writeSchema: StructType,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       messages.collect { case LakeFileMessage(staged) =>
         staged.foreach(s => fs.delete(new Path(s.stagedPath), false))
       }
@@ -2285,7 +2289,7 @@ class LakeWrite(dir: String, writeSchema: StructType,
   }
 }
 
-class LakeWriterFactory(dir: String, schema: StructType)
+class LakeWriterFactory(dir: String, schema: StructType)(implicit lfs: LakeFs)
     extends DataWriterFactory {
   /** The write schema with the TABLE's field-id metadata grafted on by
     * name: Spark's LogicalWriteInfo schema is the query's output shape
@@ -2453,10 +2457,10 @@ class LakeWriterFactory(dir: String, schema: StructType)
           s"$dir/_staging/t$taskId-p$partitionId-${UUID.randomUUID()}")
         var rows = 0L
         lazy val writer = {
-          val fs = staged.getFileSystem(new Configuration())
+          val fs = lfs.fs(staged)
           fs.mkdirs(staged.getParent)
           ExampleParquetWriter
-            .builder(HadoopOutputFile.fromPath(staged, new Configuration()))
+            .builder(lfs.output(staged))
             .withType(message)
             .withCompressionCodec(codec)
             .withRowGroupSize(LakeTableIO.rowGroupBytes)
@@ -2466,7 +2470,7 @@ class LakeWriterFactory(dir: String, schema: StructType)
         def close(delete: Boolean): Unit = if (rows > 0 || delete) {
           try writer.close() catch { case _: java.io.IOException => () }
           if (delete)
-            staged.getFileSystem(new Configuration()).delete(staged, false)
+            lfs.fs(staged).delete(staged, false)
         }
       }
       // compiled CHECK predicates, one set per observed row offset
@@ -2648,7 +2652,7 @@ class LakeWriterFactory(dir: String, schema: StructType)
         open.values.foreach(_.close(delete = true))
         // rolled files are already closed; delete their staged bytes
         rolled.foreach(f =>
-          try f.staged.getFileSystem(new Configuration())
+          try lfs.fs(f.staged)
             .delete(f.staged, false)
           catch { case _: java.io.IOException => () })
       }
@@ -2692,13 +2696,13 @@ object LakeTableIO {
     * unparseable stray value falls back to the default rather than
     * failing a write).
     */
-  def codecOf(dir: String): CompressionCodecName =
+  def codecOf(dir: String)(implicit lfs: LakeFs): CompressionCodecName =
     tableProps(dir).get(CompressionKey)
       .flatMap(v => codecs.get(v.toLowerCase))
       .getOrElse(CompressionCodecName.SNAPPY)
 
   /** The roll target for `dir`; 0 = never roll. */
-  def targetFileBytesOf(dir: String): Long =
+  def targetFileBytesOf(dir: String)(implicit lfs: LakeFs): Long =
     tableProps(dir).get(TargetFileBytesKey)
       .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
 
@@ -2753,7 +2757,8 @@ object LakeTableIO {
     * snapshot — the time-travel path.
     */
   def dataFiles(dir: String, version: Option[Long] = None,
-                branch: Option[String] = None): Seq[Path] =
+                branch: Option[String] = None)(
+      implicit lfs: LakeFs): Seq[Path] =
     dataFilesAndDvs(dir, version, branch)._1
 
   /** (data files, deletion-vector map) of a snapshot — the pair every
@@ -2761,7 +2766,7 @@ object LakeTableIO {
     * whose positions the reader subtracts.
     */
   def dataFilesAndDvs(dir: String, version: Option[Long] = None,
-                      branch: Option[String] = None)
+                      branch: Option[String] = None)(implicit lfs: LakeFs)
       : (Seq[Path], Map[String, Seq[String]]) = {
     val v = snapshotView(dir, version, branch)
     (v._1, v._2)
@@ -2789,7 +2794,8 @@ object LakeTableIO {
     * until applied.
     */
   def snapshotView(dir: String, version: Option[Long] = None,
-                   branch: Option[String] = None): SnapView =
+                   branch: Option[String] = None)(
+      implicit lfs: LakeFs): SnapView =
     snapshotViewPruned(dir, version, branch, Array.empty)
 
   /** [[snapshotView]] PLUS the same snapshot's live eq refs — ONE
@@ -2799,7 +2805,7 @@ object LakeTableIO {
     * inventories all consume this, never two separate reads).
     */
   def snapshotViewEq(dir: String, version: Option[Long] = None,
-                     branch: Option[String] = None)
+                     branch: Option[String] = None)(implicit lfs: LakeFs)
       : (SnapView, Seq[LakeEq.EqRef]) = {
     // pending decided-tx files union in exactly like snapshotView's
     // head reads (atomic cross-table visibility); they carry no stats,
@@ -2839,7 +2845,8 @@ object LakeTableIO {
     */
   def snapshotViewPruned(dir: String, version: Option[Long],
                          branch: Option[String],
-                         pushed: Array[Filter]): SnapView = {
+                         pushed: Array[Filter])(
+      implicit lfs: LakeFs): SnapView = {
     val keepSeg: LakeLog.SegRef => Boolean =
       if (pushed.isEmpty) _ => true
       else {
@@ -2889,7 +2896,8 @@ object LakeTableIO {
     * reclaims _staging leftovers).
     */
   def stageThroughConnector(df: org.apache.spark.sql.DataFrame,
-                            dir: String): Seq[StagedLakeFile] = {
+                            dir: String)(
+      implicit lfs: LakeFs): Seq[StagedLakeFile] = {
     val factory = new LakeWriterFactory(dir, df.schema)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       val w = factory.createWriter(pid,
@@ -2907,10 +2915,9 @@ object LakeTableIO {
   /** Exact row count of `files` from parquet footers alone — metadata,
     * no data read. Compaction's row-preservation check runs on this.
     */
-  def footerRows(files: Seq[Path]): Long = {
-    val conf = new Configuration()
+  def footerRows(files: Seq[Path])(implicit lfs: LakeFs): Long = {
     files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = ParquetFileReader.open(lfs.input(f))
       try reader.getRowGroups.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum
@@ -3011,9 +3018,9 @@ object LakeTableIO {
                     dvs: Map[String, Seq[String]] = Map.empty,
                     stats: Map[String, LakeStats.FileStats] = Map.empty,
                     onlyPositions: Option[Array[Long]] = None,
-                    bound: Option[LakeLimits.ScanBound] = None)
+                    bound: Option[LakeLimits.ScanBound] = None)(
+      implicit lfs: LakeFs)
       : ScanPlan = {
-    val conf = new Configuration()
     val refByName = cols.map(r => r.name -> r).toMap
     // one file's plan contribution: its surviving splits + counters —
     // independent footer I/O, computed in PARALLEL below (bounded
@@ -3047,7 +3054,7 @@ object LakeTableIO {
         statsPruned0 += 1
       } else {
         LakeStats.noteFooterOpen()
-        val in = HadoopInputFile.fromPath(file, conf)
+        val in = lfs.input(file)
         val reader = ParquetFileReader.open(in)
         try {
           val fileSchema = reader.getFooter.getFileMetaData.getSchema
@@ -3222,7 +3229,8 @@ object LakeTableIO {
     * that resurrects rows).
     */
   def snapshotEqs(dir: String, version: Option[Long] = None,
-                  branch: Option[String] = None): Seq[LakeEq.EqRef] =
+                  branch: Option[String] = None)(
+      implicit lfs: LakeFs): Seq[LakeEq.EqRef] =
     version match {
       case Some(v) =>
         LakeLog.snapshotAtPruned(dir, v, branch, _ => false).eqs
@@ -3233,7 +3241,7 @@ object LakeTableIO {
 
   private def filteredView(
       dir: String, version: Option[Long], branch: Option[String],
-      tableSchema: StructType, pushed: Array[Filter])
+      tableSchema: StructType, pushed: Array[Filter])(implicit lfs: LakeFs)
       : Option[SnapView] = {
     // live equality deletes make every physical fact (counts, bounds,
     // sums, live-row arithmetic) potentially stale for the files they
@@ -3296,7 +3304,7 @@ object LakeTableIO {
       // stats-PROVEN consumed filters: no file restriction (every row
       // matches), but the proof is re-verified against THIS call's
       // snapshot below — decline on any file it can't vouch for
-      proven: Array[Filter] = Array.empty)
+      proven: Array[Filter] = Array.empty)(implicit lfs: LakeFs)
       : Option[Seq[(org.apache.spark.sql.types.DataType, Any)]] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
@@ -3408,7 +3416,7 @@ object LakeTableIO {
       exprs: Seq[org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc],
       version: Option[Long], branch: Option[String],
       pushed: Array[Filter] = Array.empty,
-      proven: Array[Filter] = Array.empty)
+      proven: Array[Filter] = Array.empty)(implicit lfs: LakeFs)
       : Option[(StructType, Seq[Seq[Any]])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
@@ -3819,7 +3827,8 @@ object LakeTableIO {
                eqs: Seq[LakeEq.EqRef],
                stats: Map[String, LakeStats.FileStats],
                schema: StructType,
-               parts: Map[String, Seq[String]] = Map.empty)
+               parts: Map[String, Seq[String]] = Map.empty)(
+      implicit lfs: LakeFs)
       : Array[InputPartition] =
     if (eqs.isEmpty) ps
     else {
@@ -3882,7 +3891,7 @@ object LakeTableIO {
       * amended file's rewritten segment is by definition fresh, so
       * amendments land too) and subtract removed files.
       */
-    def advance(nv: Long): Unit = {
+    def advance(nv: Long)(implicit lfs: LakeFs): Unit = {
       require(nv == v + 1,
         s"CdcCarry of $dir is at v$v, cannot advance to v$nv")
       val known = segs
@@ -3936,7 +3945,7 @@ object LakeTableIO {
     def fullFor(carry: Option[CdcCarry], dir: String,
                 branch: Option[String], v: Long,
                 snap: LakeLog.Snapshot, isFull: Boolean,
-                needsFull: Boolean)
+                needsFull: Boolean)(implicit lfs: LakeFs)
         : (Option[CdcCarry], Option[LakeLog.Snapshot]) =
       if (isFull) // snap IS the full view here — seed for free
         (Some(from(dir, branch, snap)),
@@ -3988,7 +3997,8 @@ object LakeTableIO {
   def planCdcVersion(dir: String, snap: LakeLog.Snapshot,
                      cols: Array[LakeColumnRef], pushed: Array[Filter],
                      initialSnapshot: Boolean,
-                     carriedFull: Option[LakeLog.Snapshot] = None)
+                     carriedFull: Option[LakeLog.Snapshot] = None)(
+      implicit lfs: LakeFs)
       : Array[InputPartition] = {
     def annotate(parts: Array[InputPartition],
                  info: LakeCdcInfo): Array[InputPartition] =
@@ -4139,16 +4149,17 @@ object LakeTableIO {
     * metadata rides in the sidecar's v2 JSON encoding (see
     * [[writeSchema]]); v1 plain-DDL sidecars keep parsing (id-less).
     */
-  def tableSchema(dir: String): StructType = tableSchemaInfo(dir)._1
+  def tableSchema(dir: String)(
+      implicit lfs: LakeFs): StructType = tableSchemaInfo(dir)._1
 
   /** (schema, maxFieldId). `maxFieldId = 0` marks a pre-field-id (v1)
     * schema; ALTER migrates it by assigning ids 1..n before evolving.
     * Ids are never reused after a DROP — that is the invariant that
     * lets a dropped name be re-added without resurrecting old values.
     */
-  def tableSchemaInfo(dir: String): (StructType, Int) = {
+  def tableSchemaInfo(dir: String)(implicit lfs: LakeFs): (StructType, Int) = {
     val ddl = new Path(dir, "_schema.ddl")
-    val fs = ddl.getFileSystem(new Configuration())
+    val fs = lfs.fs(ddl)
     if (fs.exists(ddl)) {
       val in = fs.open(ddl)
       val text =
@@ -4166,7 +4177,7 @@ object LakeTableIO {
     } else LakeLog.rawDataFiles(dir).headOption.map(new Path(dir, _)) match {
       case Some(f) =>
         val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(f, new Configuration()))
+          lfs.input(f))
         try (LakeParquet.toStructType(
           reader.getFooter.getFileMetaData.getSchema), 0)
         finally reader.close()
@@ -4178,21 +4189,18 @@ object LakeTableIO {
 
   /** Atomically replace the schema sidecar (ALTER TABLE's commit):
     * last ALTER wins, and a concurrent [[tableSchema]] sees either
-    * complete sidecar, never a torn or MISSING one. On `file://` that
-    * is a true atomic overwrite (rename(2) via nio ATOMIC_MOVE —
-    * delete-then-rename would open a window where the sidecar is
-    * absent and a racing reader falls back to a data-file footer,
-    * transiently resurrecting dropped columns). Other schemes fall
-    * back to delete+rename, the documented port caveat (HDFS has
-    * overwrite-rename via FileContext; object stores need their
-    * conditional PUT).
+    * complete sidecar, never a torn or MISSING one — a missing sidecar
+    * would make a racing reader fall back to a data-file footer,
+    * transiently resurrecting dropped columns. [[LakeFs.replace]]
+    * guarantees that on `file://`; other schemes keep its
+    * delete-then-rename window, the documented port caveat.
     */
-  def writeSchema(dir: String, schema: StructType): Unit =
+  def writeSchema(dir: String, schema: StructType)(implicit lfs: LakeFs): Unit =
     writeSchema(dir, schema,
       schema.fields.flatMap(LakeParquet.fieldId).foldLeft(0)(math.max))
 
-  def writeSchema(dir: String, schema: StructType, maxFieldId: Int): Unit = {
-    val fs = new Path(dir).getFileSystem(new Configuration())
+  def writeSchema(dir: String, schema: StructType, maxFieldId: Int)(
+      implicit lfs: LakeFs): Unit = {
     val dest = new Path(dir, "_schema.ddl")
     // v2 JSON when the schema carries field ids (StructType.json keeps
     // the metadata); plain DDL otherwise — so a never-altered table's
@@ -4201,35 +4209,7 @@ object LakeTableIO {
       if (maxFieldId > 0)
         s"""{"graftSchemaVersion":2,"maxFieldId":$maxFieldId,"schema":${schema.json}}"""
       else schema.toDDL
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if ("file".equalsIgnoreCase(fs.getScheme)) {
-      // stage and move through java.nio, OUTSIDE Hadoop's
-      // ChecksumFileSystem: the move must not leave a stale `.crc`
-      // sidecar describing the previous contents (a Hadoop reader
-      // would fail the checksum). Any crc a previous Hadoop-path write
-      // left is dropped first — between that delete and the move a
-      // racing reader sees the OLD sidecar unverified, never a missing
-      // or torn one.
-      val tmp = java.nio.file.Paths.get(dir,
-        s"._schema-${java.util.UUID.randomUUID()}.ddl")
-      java.nio.file.Files.write(tmp, bytes)
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "._schema.ddl.crc"))
-      java.nio.file.Files.move(tmp,
-        java.nio.file.Paths.get(dest.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      // non-posix schemes: delete+rename, the documented port caveat
-      // (HDFS has overwrite-rename via FileContext; object stores need
-      // their conditional PUT)
-      val tmp = new Path(dir, s"._schema-${java.util.UUID.randomUUID()}.ddl")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      fs.delete(dest, false)
-      if (!fs.rename(tmp, dest))
-        throw new java.io.IOException(s"failed to publish schema in $dir")
-    }
+    lfs.replace(dest, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Table properties sidecar (`_props.json`): the DML-mode switch and
@@ -4249,18 +4229,17 @@ object LakeTableIO {
   val SortColsKey = "write.sort.columns"
 
   /** The declared write-sort columns, empty when unset. */
-  def sortColumnsOf(dir: String): Seq[String] =
+  def sortColumnsOf(dir: String)(implicit lfs: LakeFs): Seq[String] =
     tableProps(dir).get(SortColsKey).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
-  def tableProps(dir: String): Map[String, String] = {
+  def tableProps(dir: String)(implicit lfs: LakeFs): Map[String, String] = {
     val p = new Path(dir, "_props.json")
-    val fs = p.getFileSystem(new Configuration())
+    val fs = lfs.fs(p)
     if (!fs.exists(p)) Map.empty
     else
       try {
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
+        val bytes = lfs.read(p)
         new com.fasterxml.jackson.databind.ObjectMapper()
           .readValue(bytes, classOf[java.util.Map[String, String]])
           .asScala.toMap
@@ -4274,51 +4253,36 @@ object LakeTableIO {
     * would un-enforce a declared guarantee; the knobs that only add
     * optional pruning keep the lenient reader).
     */
-  def tablePropsStrict(dir: String): Map[String, String] = {
+  def tablePropsStrict(dir: String)(
+      implicit lfs: LakeFs): Map[String, String] = {
     val p = new Path(dir, "_props.json")
-    val fs = p.getFileSystem(new Configuration())
+    val fs = lfs.fs(p)
     if (!fs.exists(p)) Map.empty
     else {
-      val in = fs.open(p)
-      val bytes = try in.readAllBytes() finally in.close()
+      val bytes = lfs.read(p)
       new com.fasterxml.jackson.databind.ObjectMapper()
         .readValue(bytes, classOf[java.util.Map[String, String]])
         .asScala.toMap
     }
   }
 
-  def writeProps(dir: String, props: Map[String, String]): Unit = {
-    val fs = new Path(dir).getFileSystem(new Configuration())
+  def writeProps(dir: String, props: Map[String, String])(
+      implicit lfs: LakeFs): Unit = {
+    val fs = lfs.fs(dir)
     val dest = new Path(dir, "_props.json")
     if (props.isEmpty) { fs.delete(dest, false); return }
     val m = new java.util.HashMap[String, String]()
     props.foreach { case (k, v) => m.put(k, v) }
-    val bytes = new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsBytes(m)
-    if ("file".equalsIgnoreCase(fs.getScheme)) {
-      val tmp = java.nio.file.Paths.get(dir,
-        s"._props-${java.util.UUID.randomUUID()}.json")
-      java.nio.file.Files.write(tmp, bytes)
-      java.nio.file.Files.move(tmp,
-        java.nio.file.Paths.get(dest.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val tmp = new Path(dir, s"._props-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      fs.delete(dest, false)
-      fs.rename(tmp, dest)
-    }
+    lfs.replace(dest,
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsBytes(m))
   }
 
   /** Column names present in ANY current data file's footer — plan
     * evidence and diagnostics (driver-side footer metadata).
     */
-  def footerColumns(dir: String): Set[String] = {
-    val conf = new Configuration()
+  def footerColumns(dir: String)(implicit lfs: LakeFs): Set[String] = {
     dataFiles(dir).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = ParquetFileReader.open(lfs.input(f))
       try reader.getFooter.getFileMetaData.getSchema
         .getFields.asScala.map(_.getName).toSeq
       finally reader.close()
@@ -4330,10 +4294,9 @@ object LakeTableIO {
     * files resolve strictly by id and can never leak a re-added
     * name's old values).
     */
-  def legacyFooterColumns(dir: String): Set[String] = {
-    val conf = new Configuration()
+  def legacyFooterColumns(dir: String)(implicit lfs: LakeFs): Set[String] = {
     dataFiles(dir).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = ParquetFileReader.open(lfs.input(f))
       try {
         val fields = reader.getFooter.getFileMetaData.getSchema
           .getFields.asScala
@@ -4380,7 +4343,8 @@ object LakeTableIO {
     */
   def fileMightContain(file: String, ref: LakeColumnRef,
                        values: Seq[Any],
-                       stats: Option[LakeStats.FileStats] = None): Boolean = {
+                       stats: Option[LakeStats.FileStats] = None)(
+      implicit lfs: LakeFs): Boolean = {
     val catalystToFilter: Any => Option[Any] = {
       case v: java.lang.Long    => Some(v)
       case v: java.lang.Integer => Some(v)
@@ -4401,7 +4365,7 @@ object LakeTableIO {
     }
     LakeStats.noteFooterOpen()
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
+      lfs.input(new Path(file)))
     try {
       // stats live under the file-LOCAL name (a renamed column keeps
       // its old name in old files); an absent column keeps the file

@@ -5,8 +5,7 @@ import java.util.{ArrayList, HashMap => JHashMap, List => JList, Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-table ATOMIC commit across tables of one catalog root — the
@@ -64,9 +63,6 @@ object LakeTx {
 
   private def txDir(root: String): Path = new Path(root, "_txn")
 
-  private def fsFor(p: String): FileSystem =
-    new Path(p).getFileSystem(new Configuration())
-
   /** Stage `df` as published-but-uncommitted parquet files of the table
     * at `dir`: written to a scratch subdir, then renamed into the table
     * directory under fresh UUID names (invisible until a manifest
@@ -84,8 +80,8 @@ object LakeTx {
     * this stages through).
     */
   def stageAppend(spark: SparkSession, df: DataFrame, dir: String,
-                  operation: String): TableAppend = {
-    val fs = fsFor(dir)
+                  operation: String)(implicit lfs: LakeFs): TableAppend = {
+    val fs = lfs.fs(dir)
     // write through the CONNECTOR's writer (not a raw parquet dump):
     // field ids land in the footers and — on partitioned tables — the
     // rows split per tuple, so transactional appends keep the same
@@ -111,7 +107,8 @@ object LakeTx {
     * then decide → apply → forget as documented above. Returns the
     * transaction id.
     */
-  def commit(root: String, appends: Seq[TableAppend]): String = {
+  def commit(root: String, appends: Seq[TableAppend])(
+      implicit lfs: LakeFs): String = {
     require(appends.nonEmpty, "empty transaction")
     recover(root)
     val txid = java.util.UUID.randomUUID().toString
@@ -126,14 +123,14 @@ object LakeTx {
     * then delete the marker. Returns the number of transactions
     * completed. Run by every [[commit]]; safe to call any time.
     */
-  def recover(root: String): Int = {
-    val fs = fsFor(root)
+  def recover(root: String)(implicit lfs: LakeFs): Int = {
+    val fs = lfs.fs(root)
     val d = txDir(root)
     if (!fs.exists(d)) return 0
     val markers = fs.listStatus(d).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("tx-"))
     markers.foreach { m =>
-      val (txid, appends) = readMarker(fs, m.getPath)
+      val (txid, appends) = readMarker(m.getPath)
       appends.foreach(applyOne(txid, _))
       fs.delete(m.getPath, false)
     }
@@ -141,8 +138,9 @@ object LakeTx {
   }
 
   private[graft] def writeMarker(root: String, txid: String,
-                                 appends: Seq[TableAppend]): Unit = {
-    val fs = fsFor(root)
+                                 appends: Seq[TableAppend])(
+      implicit lfs: LakeFs): Unit = {
+    val fs = lfs.fs(root)
     fs.mkdirs(txDir(root))
     // before the marker can flip visibility, every participant table
     // gets a PERMANENT `_log/_txroot` pointer back to the root — the
@@ -152,7 +150,7 @@ object LakeTx {
     // single exists() check.
     appends.foreach { a =>
       val ptr = new Path(a.dir, "_log/_txroot")
-      val pfs = fsFor(a.dir)
+      val pfs = lfs.fs(a.dir)
       if (!pfs.exists(ptr)) {
         pfs.mkdirs(ptr.getParent)
         val out =
@@ -187,28 +185,15 @@ object LakeTx {
       list.add(m)
     }
     body.put("appends", list)
-    val tmp = new Path(txDir(root),
-      s".tmp-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(body)) finally out.close()
     val dest = new Path(txDir(root), s"tx-$txid.json")
     // atomic create — THE commit point of the whole transaction
-    if (!(if ("file".equalsIgnoreCase(fs.getScheme)) {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dest.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else fs.rename(tmp, dest)))
+    if (!lfs.create(dest, mapper.writeValueAsBytes(body)))
       throw new java.io.IOException(s"failed to publish tx marker $dest")
-    fs.delete(tmp, false)
   }
 
-  private def readMarker(fs: FileSystem,
-                         p: Path): (String, Seq[TableAppend]) = {
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
+  private def readMarker(p: Path)(
+      implicit lfs: LakeFs): (String, Seq[TableAppend]) = {
+    val bytes = lfs.read(p)
     val body = mapper.readValue(bytes, classOf[JMap[String, Object]])
     val txid = String.valueOf(body.get("txid"))
     val appends = body.get("appends").asInstanceOf[JList[JMap[String, Object]]]
@@ -236,12 +221,14 @@ object LakeTx {
     * pass a stale pre-check and double-apply; the loser of the version
     * race re-checks and no-ops.
     */
-  private[graft] def applyOne(txid: String, a: TableAppend): Unit =
+  private[graft] def applyOne(txid: String, a: TableAppend)(
+      implicit lfs: LakeFs): Unit =
     LakeLog.commit(a.dir, s"txn($txid)", a.added, Seq.empty, a.addedRows,
       dedupeOnOperation = true, addedParts = a.parts)
 
-  private[graft] def forget(root: String, txid: String): Unit =
-    fsFor(root).delete(new Path(txDir(root), s"tx-$txid.json"), false)
+  private[graft] def forget(root: String, txid: String)(
+      implicit lfs: LakeFs): Unit =
+    lfs.fs(root).delete(new Path(txDir(root), s"tx-$txid.json"), false)
 
   /** DECIDED-but-possibly-unapplied appends targeting `dir`, from live
     * transaction markers — the read-side half of catalog-owned atomic
@@ -262,8 +249,8 @@ object LakeTx {
     * plus a LIST of `<root>/_txn/` — a directory that is empty except
     * during the decide→forget window, which spans two metadata commits.
     */
-  def pendingFor(dir: String): Seq[TableAppend] = {
-    val fs = fsFor(dir)
+  def pendingFor(dir: String)(implicit lfs: LakeFs): Seq[TableAppend] = {
+    val fs = lfs.fs(dir)
     val ptr = new Path(dir, "_log/_txroot")
     if (!fs.exists(ptr)) return Seq.empty
     val in = fs.open(ptr)
@@ -272,7 +259,7 @@ object LakeTx {
         java.nio.charset.StandardCharsets.UTF_8).trim
       finally in.close()
     val d = txDir(root)
-    val rfs = fsFor(root)
+    val rfs = lfs.fs(root)
     if (!rfs.exists(d)) return Seq.empty
     val norm = new Path(dir).toUri.getPath
     rfs.listStatus(d).toSeq
@@ -281,7 +268,7 @@ object LakeTx {
         // a marker deleted between LIST and read (forget racing us)
         // means its applies all landed — the manifest covers it
         val parsed =
-          try Some(readMarker(rfs, m.getPath))
+          try Some(readMarker(m.getPath))
           catch { case _: java.io.FileNotFoundException => None }
         parsed.toSeq.flatMap(_._2)
           .filter(a => new Path(a.dir).toUri.getPath == norm)
@@ -312,8 +299,9 @@ object LakeTx {
     * versions) per table, nothing touches data.
     */
   def consistentView(root: String,
-                     dirs: Seq[String]): Map[String, Option[Long]] = {
-    val fs = fsFor(root)
+                     dirs: Seq[String])(
+      implicit lfs: LakeFs): Map[String, Option[Long]] = {
+    val fs = lfs.fs(root)
     // per table: version -> txid for every retained txn-tagged manifest
     val TxnOp = """txn\(([0-9a-f-]+)\)""".r
     // operations come from the lazily-extended ops hint: manifests are
@@ -337,7 +325,7 @@ object LakeTx {
       else fs.listStatus(d0).toSeq
         .filter(s => s.isFile && s.getPath.getName.startsWith("tx-"))
         .flatMap { m =>
-          val (txid, appends) = readMarker(fs, m.getPath)
+          val (txid, appends) = readMarker(m.getPath)
           val appliedAll = appends.forall(a =>
             txnAt.getOrElse(a.dir, Seq.empty).exists(_._2 == txid) ||
               // participant outside `dirs`: check its log (same

@@ -1,6 +1,5 @@
 package graft.sources.dsv2
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -65,7 +64,7 @@ class LakeUpsertWrite(dir: String, rowSchema: StructType,
                       // rewrite_deletes inline (between epochs — this
                       // query's only writer is idle then); a benign
                       // cross-writer race retries next epoch
-                      retireMaxRefs: Option[Int] = None)
+                      retireMaxRefs: Option[Int] = None)(implicit lfs: LakeFs)
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
@@ -144,7 +143,7 @@ class LakeUpsertWrite(dir: String, rowSchema: StructType,
 
     override def commit(epochId: Long,
                         messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       val msgs = messages.collect { case m: LakeUpsertMessage => m }
       def dropStaged(): Unit = msgs.foreach(_.staged.foreach(s =>
         try fs.delete(new Path(s.stagedPath), false)
@@ -262,7 +261,7 @@ class LakeUpsertWrite(dir: String, rowSchema: StructType,
 
     override def abort(epochId: Long,
                        messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(dir).getFileSystem(new Configuration())
+      val fs = lfs.fs(dir)
       messages.collect { case m: LakeUpsertMessage =>
         m.staged.foreach { s =>
           try fs.delete(new Path(s.stagedPath), false)
@@ -292,7 +291,8 @@ class LakeUpsertWriterFactory(
     dir: String, rowSchema: StructType,
     keyIdx: Array[(Int, DataType)], orderIdx: Int, orderType: DataType,
     tombstoneExpr: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-    eqSpec: Option[(Int, Seq[LakePartitioning.Bound])] = None)
+    eqSpec: Option[(Int, Seq[LakePartitioning.Bound])] = None)(
+    implicit lfs: LakeFs)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,

@@ -28,6 +28,8 @@ object ScanBench {
     val spark = graft.GraftSession.local(cpus, "graft-scanbench")
     import graft.sources.dsv2.LakeCatalogs
     LakeCatalogs.register(spark)
+    implicit val lfs: graft.sources.dsv2.LakeFs =
+      graft.sources.dsv2.LakeFs(spark)
     val ns = LakeCatalogs.ns(sfDir)
     val tbl = s"${LakeCatalogs.CatalogName}.$ns.scanbench_orders"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -43,8 +45,7 @@ object ScanBench {
         sfDir, "scanbench_orders")
       val total = graft.sources.dsv2.LakeLog.current(dir).get.files
         .map(f => new org.apache.hadoop.fs.Path(dir, f))
-        .map(p => p.getFileSystem(new org.apache.hadoop.conf
-          .Configuration()).getFileStatus(p).getLen).sum
+        .map(p => lfs.fs(p).getFileStatus(p).getLen).sum
       val (b, a) = graft.operators.LakeSnapshots.compact(
         spark, dir, math.max(1L, total / compactFiles) + (32L << 10))
       println(s"SCANB compacted files $b -> $a")

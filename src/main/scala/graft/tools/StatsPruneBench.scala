@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
-import graft.sources.dsv2.{GraftCatalog, LakeLog, LakeStats, LakeTableIO}
+import graft.sources.dsv2.{GraftCatalog, LakeFs, LakeLog, LakeStats,
+  LakeTableIO}
 
 /** Measure what manifest-embedded file stats buy at PLANNING time: a
   * lake table of N range-disjoint files, a selective key predicate,
@@ -32,6 +33,7 @@ object StatsPruneBench {
       .createTempDirectory("graft-spb").toString
     spark.conf.set("spark.sql.catalog.spb", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.spb.root", root)
+    implicit val lfs: LakeFs = LakeFs(spark)
 
     sizes.foreach { n =>
       val tbl = s"spb.db.t$n"

@@ -49,6 +49,18 @@ class GraphScaleSpec extends SparkSpec {
   private def hasAggregate(p: LogicalPlan): Boolean =
     p.collectFirst { case a: Aggregate => a }.nonEmpty
 
+  test("sql_recursive_bfs drops its per-execution view: two executions " +
+       "leave the owner session's temp-view count unchanged") {
+    val bfs = graft.queries.RelationalQueries.queries("sql_recursive_bfs")
+    val owner = bfs(spark, sfDir).sparkSession
+    def tempViews: Int =
+      owner.catalog.listTables().collect().count(_.isTemporary)
+    val before = tempViews
+    bfs(spark, sfDir).collect()
+    bfs(spark, sfDir).collect()
+    assert(tempViews == before)
+  }
+
   test("graph_triangles: enumeration happens on the post-aggregation " +
        "edge list — no join in the plan self-joins raw fact rows") {
     val df = graft.queries.RelationalQueries.queries("graph_triangles")(

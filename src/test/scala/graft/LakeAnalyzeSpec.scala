@@ -87,8 +87,7 @@ class LakeAnalyzeSpec extends SparkSpec {
       spark.range(0, 500).selectExpr("id AS k",
         "CASE WHEN id % 5 = 0 THEN NULL ELSE concat('v', id) END AS v")
         .coalesce(2).write.parquet(dir)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
       LakeLog.commit(dir, "noop", Seq.empty, Seq.empty, 0L)
       assert(!pushed(spark.sql(s"SELECT min(k) FROM $cat.db.ext")),
@@ -255,8 +254,7 @@ class LakeAnalyzeSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("zero-src").toString
       spark.table(s"$cat.db.z").limit(0).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.endsWith(".parquet")).get
       val zname = "part-zero-row.parquet"
@@ -296,8 +294,7 @@ class LakeAnalyzeSpec extends SparkSpec {
       spark.sql(s"CREATE TABLE $cat.db.ch (k BIGINT) " +
         "TBLPROPERTIES ('stats.ndv.columns'='k')")
       val dir = s"$root/db/ch"
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       // a 3-file fact-less backlog: external commits carry footer
       // stats (harvested at commit) but none of the write-time facts
       (0 until 3).foreach { i =>

@@ -171,8 +171,7 @@ class LakeBloomSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("graft-bloom-ext").toString
       spark.range(100, 200).selectExpr("id AS k", "concat('x', id) AS v")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val src = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       fs.rename(new org.apache.hadoop.fs.Path(src.getAbsolutePath),

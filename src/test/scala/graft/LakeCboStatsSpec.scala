@@ -177,8 +177,7 @@ class LakeCboStatsSpec extends SparkSpec {
       val dir = s"$root/db/ext"
       spark.range(0, 100).selectExpr("id AS k").coalesce(1)
         .write.parquet(dir)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
       LakeLog.commit(dir, "noop", Seq.empty, Seq.empty, 0L)
       val head = LakeLog.current(dir).get

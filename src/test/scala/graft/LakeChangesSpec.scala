@@ -219,9 +219,7 @@ class LakeChangesSpec extends SparkSpec {
           s"expected 1 positional partition, got ${deleteParts.length}")
         val groups = {
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(deleteParts.head.path),
-              new org.apache.hadoop.conf.Configuration()))
+            lfs.input(new org.apache.hadoop.fs.Path(deleteParts.head.path)))
           try reader.getRowGroups.size() finally reader.close()
         }
         assert(groups > 5, s"fixture should be multi-group, got $groups")

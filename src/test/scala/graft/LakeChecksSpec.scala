@@ -276,8 +276,7 @@ class LakeChecksSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("race-sneak").toString
       spark.sql("SELECT CAST(3 AS BIGINT) AS k, CAST(-7 AS BIGINT) AS qty")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.endsWith(".parquet")).get
       val sneak = "part-sneak-race.parquet"
@@ -381,12 +380,10 @@ class LakeChecksSpec extends SparkSpec {
   }
 
   test("history-graft markers are write-once versioned files: the max " +
-       "over a listing is never transiently invisible, legacy markers " +
-       "still read, and an UNREADABLE legacy marker keeps its " +
-       "conservative claim after a new graft is noted") {
+       "over a listing is never transiently invisible, and a newer " +
+       "marker retires the older ones") {
     val dir = Files.createTempDirectory("graft-marker").toString
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      new org.apache.hadoop.conf.Configuration())
+    val fs = lfs.fs(dir)
     import graft.sources.dsv2.LakeLog
     assert(LakeLog.historyGraftVersion(dir).isEmpty, "no grafts ever")
     LakeLog.noteHistoryGraft(dir, 5L)
@@ -401,20 +398,6 @@ class LakeChecksSpec extends SparkSpec {
     val log = new org.apache.hadoop.fs.Path(dir, "_log")
     val names = fs.listStatus(log).map(_.getPath.getName)
       .filter(_.startsWith("_histgraft-")).toSeq
-    assert(names.nonEmpty && names.forall(_.endsWith(".json")), names)
-    // legacy single-file marker (pre-r14 layout) still reads, and wins
-    // when newer than any versioned marker
-    val legacy = new org.apache.hadoop.fs.Path(log, "_histgraft.json")
-    val out = fs.create(legacy, true)
-    out.write("""{"version": 12}""".getBytes("UTF-8")); out.close()
-    assert(LakeLog.historyGraftVersion(dir).contains(12L))
-    // an UNREADABLE legacy marker claims MaxValue (conservative) and a
-    // new note must NOT delete it (that would downgrade the claim)
-    val out2 = fs.create(legacy, true)
-    out2.write("not json".getBytes("UTF-8")); out2.close()
-    assert(LakeLog.historyGraftVersion(dir).contains(Long.MaxValue))
-    LakeLog.noteHistoryGraft(dir, 15L)
-    assert(LakeLog.historyGraftVersion(dir).contains(Long.MaxValue),
-      "the unreadable legacy marker's conservative claim must survive")
+    assert(names == Seq(f"_histgraft-${9L}%020d.json"), names)
   }
 }

@@ -365,8 +365,7 @@ class LakeEqDeleteSpec extends SparkSpec {
     // add version
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .write.mode("overwrite").parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      new org.apache.hadoop.conf.Configuration())
+    val fs = lfs.fs(dir)
     fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
     LakeLog.commit(dir, "noop", Seq.empty, Seq.empty, 0L) // bootstrap v0
     val side = LakeEq.write(dir, Seq("k"), Seq("1"))
@@ -1085,8 +1084,7 @@ class LakeEqDeleteSpec extends SparkSpec {
     // the sidecar does not exist yet: the read fails, scoping answers
     // None (attach conservatively) — and must NOT cache that answer
     assert(LakeEq.scopeValues(dir, name, Seq(lt)).isEmpty)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = lfs.fs(dir)
     val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), false)
     try out.write("""{"keyCols":["k"],"keys":["5"]}""".getBytes("UTF-8"))
     finally out.close()

@@ -169,8 +169,7 @@ class LakeLimitSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("graft-limit-ext").toString
       spark.range(-100, -90).selectExpr("id AS k", "concat('x', id) AS v")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val src = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       fs.rename(new org.apache.hadoop.fs.Path(src.getAbsolutePath),
@@ -483,8 +482,7 @@ class LakeLimitSpec extends SparkSpec {
       val dir = s"$root/db/cp"
       val before = LakeLog.current(dir).get
       assert(before.files.size == 2)
-      val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fsys = lfs.fs(dir)
       val sum = before.files.map(f => fsys.getFileStatus(
         new org.apache.hadoop.fs.Path(dir, f)).getLen).sum
       // target below the pair's sum and above each file: both classify

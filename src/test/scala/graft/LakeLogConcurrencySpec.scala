@@ -5,18 +5,17 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import scala.util.{Failure, Success, Try}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.sources.dsv2.LakeLog
 
 /** The snapshot log under REAL concurrency — many JVM threads racing
-  * the same optimistic-commit loop. No Spark session needed: the log is
-  * two filesystem primitives, so this is a pure driver-contract test.
+  * the same optimistic-commit loop. The log is two filesystem
+  * primitives, so this is a pure driver-contract test (the shared
+  * session only supplies the lake handle's Hadoop conf).
   * (The 100 TB relevance: on a cluster, concurrent writers are separate
   * DRIVERS hitting shared storage; rename-without-overwrite is the only
   * arbitration. These tests are that arbitration, minus the network.)
   */
-class LakeLogConcurrencySpec extends AnyFunSuite {
+class LakeLogConcurrencySpec extends SparkSpec {
 
   private def freshDir(): String = {
     val d = Files.createTempDirectory("graft-logc").toString

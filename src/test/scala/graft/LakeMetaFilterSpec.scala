@@ -225,8 +225,7 @@ class LakeMetaFilterSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("graft-ext").toString
       spark.range(100, 200).selectExpr("concat('p', id % 2) AS g",
         "id AS k").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val src = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       val extName = "external-untupled.parquet"

@@ -292,12 +292,11 @@ class LakeMorSpec extends SparkSpec {
   }
 
   test("DV codec: roaring-style containers round-trip sparse, dense and " +
-       "bucket-boundary position sets exactly; dense sets compress far " +
-       "below the legacy JSON form, which still decodes") {
+       "bucket-boundary position sets exactly; a dense set stays ~8 KiB " +
+       "and a file's sidecars decode as their union") {
     import graft.sources.dsv2.LakeDv
     val dir = java.nio.file.Files.createTempDirectory("graft-dv").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = lfs.fs(dir)
     def size(name: String): Long =
       fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, name)).getLen
     def roundTrip(ps: Seq[Long]): Unit = {
@@ -318,18 +317,14 @@ class LakeMorSpec extends SparkSpec {
     // random sets, duplicated input tolerated
     val rnd = new scala.util.Random(42)
     roundTrip(Seq.fill(5000)(rnd.nextLong(200000L)) ++ Seq(7L, 7L, 7L))
-    // size: a dense 65536-position DV is ~8 KiB binary vs ~0.5 MiB JSON
+    // a dense bitmap DV stays ~8 KiB, and a file's DVs decode as the
+    // union of its sidecars
     val dense = (0L until 65536L).toSeq
     val bin = LakeDv.write(dir, "f.parquet", dense)
-    val json = LakeDv.writeLegacyJson(dir, "f.parquet", dense)
     assert(size(bin) < 10000, s"bitmap container should be ~8KiB, " +
       s"got ${size(bin)}")
-    assert(size(json) > 40 * size(bin),
-      s"JSON ${size(json)} vs bin ${size(bin)}")
-    // the legacy vintage decodes identically, and mixed-form unions work
-    assert(LakeDv.positions(dir, Seq(json)).toSeq == dense)
     val extra = LakeDv.write(dir, "f.parquet", Seq(70000L))
-    assert(LakeDv.positions(dir, Seq(json, extra)).toSeq ==
+    assert(LakeDv.positions(dir, Seq(bin, extra)).toSeq ==
       dense :+ 70000L)
   }
 }

@@ -120,8 +120,7 @@ class LakeProofConsumptionSpec extends SparkSpec {
       val dir = s"$root/db/ext"
       spark.range(5, 50).selectExpr("id AS k").coalesce(1)
         .write.parquet(dir)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
       graft.sources.dsv2.LakeLog.commit(
         dir, "noop", Seq.empty, Seq.empty, 0L)

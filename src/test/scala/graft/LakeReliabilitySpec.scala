@@ -376,8 +376,7 @@ class LakeReliabilitySpec extends SparkSpec {
         s"amortized O(new versions): expected <= 3 manifest reads " +
           s"for one new commit, read $delta")
       // the hint lives in the BRANCH's own log dir and retires with it
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       spark.sql(s"CALL $cat.system.fast_forward('db.b20', 'wap')")
       assert(spark.table(s"$cat.db.b20").count() == 22L)
     }

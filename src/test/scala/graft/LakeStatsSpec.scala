@@ -101,8 +101,7 @@ class LakeStatsSpec extends SparkSpec {
       val dir = s"$root/ext"
       spark.range(0, 100).selectExpr("id AS k").coalesce(1)
         .write.parquet(dir)
-      val fs = new Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       fs.delete(new Path(dir, "_SUCCESS"), false)
       // any commit bootstraps v0 from the raw listing — those files
       // get no stats harvest (they were not written through a commit)

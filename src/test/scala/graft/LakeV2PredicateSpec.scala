@@ -126,8 +126,7 @@ class LakeV2PredicateSpec extends SparkSpec {
       spark.sql("SELECT DATE '2024-05-05' AS d, CAST(100 AS BIGINT) AS x " +
         "UNION ALL SELECT DATE '2023-05-05', CAST(200 AS BIGINT)")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+      val fs = lfs.fs(dir)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.endsWith(".parquet")).get
       fs.rename(part, new org.apache.hadoop.fs.Path(dir, "part-ext.parquet"))

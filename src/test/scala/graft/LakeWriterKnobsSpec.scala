@@ -28,11 +28,9 @@ class LakeWriterKnobsSpec extends SparkSpec {
   }
 
   private def codecsOf(dir: String): Map[String, String] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     LakeLog.current(dir).get.files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(dir, f), conf))
+        lfs.input(new org.apache.hadoop.fs.Path(dir, f)))
       try f -> r.getRowGroups.get(0).getColumns.get(0)
         .getCodec.toString
       finally r.close()

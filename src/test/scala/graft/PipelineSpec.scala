@@ -87,6 +87,32 @@ class PipelineSpec extends SparkSpec {
     dropAgencyTable()
   }
 
+  test("the same weekly drop rerun three times in one session writes " +
+       "the same UPDATED and ADDED CSVs each time") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    val cfg = Pipeline.Config(staging.toString, lake.toString)
+    val upd = lake.resolve(
+      "DELTA/UPDATED/Agency_Data/importdate=2024-01-15/Agency_Data_updated.csv")
+    val add = lake.resolve(
+      "DELTA/ADDED/Agency_Data/importdate=2024-01-15/Agency_Data_added.csv")
+    (1 to 3).foreach { run =>
+      // the loaded staging files are cleaned up by each run: restage
+      write(staging, "VIC240108_ABR_Agency_Data.txt",
+        Seq(row("p1"), row("p2"), row("p3")))
+      write(staging, "VIC240115_ABR_Agency_Data.txt",
+        Seq(row("p1"), row("p2", Map("org_nm" -> "CHANGED")), row("p4")))
+      Pipeline.run(spark, cfg)
+      val updKeys = Files.readAllLines(upd).asScala.tail
+        .map(_.takeWhile(_ != ','))
+      val addKeys = Files.readAllLines(add).asScala.tail
+        .map(_.takeWhile(_ != ','))
+      assert(updKeys == Seq("p2"), s"run $run UPDATED")
+      assert(addKeys == Seq("p4"), s"run $run ADDED")
+    }
+    dropAgencyTable()
+  }
+
   test("two datasets in one run: Businessname flows through the same " +
        "staging -> classify -> lake -> table path via Config.schemas, " +
        "with its own (pluggable) hook and no delta") {
